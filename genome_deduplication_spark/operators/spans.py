@@ -9,7 +9,7 @@ The web-text output model (SURVEY.md §1.5) is a `spans` table
 * `self_repeat_spans` — maximal repeated blocks *within* one document, the
   internal-repeat case the reference's v2 specifically distinguishes from
   global repeats (sample-local k-mer positions, code/dedup2.py:105,143,183).
-  Found per-doc with the suffix-array/LCP kernel inside applyInPandas.
+  Found per-doc with the suffix-array/LCP kernel inside mapInPandas.
 * `coverage_gaps` — the check-5 analogue (spans must tile [0, len),
   check_beds.sh:51-74): given a spans table, report the uncovered gaps per
   doc (empty result == full coverage).
@@ -43,16 +43,13 @@ def self_repeat_spans_py(text: str, min_len: int) -> list[tuple[int, int]]:
     if n < min_len * 2:
         return []
     sa, lcp = suffix_array_and_lcp(data)
-    spans: list[tuple[int, int]] = []
-    for i in range(1, n):
-        l = int(lcp[i])
-        if l >= min_len:
-            for start in (int(sa[i]), int(sa[i - 1])):
-                spans.append((start, start + l))
-    if not spans:
+    hit = np.flatnonzero(lcp[1:] >= min_len) + 1
+    if not len(hit):
         return []
+    starts = np.concatenate([sa[hit], sa[hit - 1]]).tolist()
+    lens = np.concatenate([lcp[hit], lcp[hit]]).tolist()
     # merge overlapping spans
-    spans.sort()
+    spans = sorted((s, s + l) for s, l in zip(starts, lens))
     merged = [spans[0]]
     for s, e in spans[1:]:
         if s <= merged[-1][1]:

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _U_DENOM = 1_000_000_007
 
@@ -121,9 +122,10 @@ def stratified_sample_exact(
     admitting ~factor * n_per expected rows; only the pruned survivors
     are ranked with a partitioned window. Exactness is verified
     (per-stratum selected counts, one bounded collect) and the threshold
-    escalates x4 on deficiency — astronomically rare with uniform keys,
-    and guaranteed to terminate because min(1.0, ...) eventually admits
-    every [0, 1) key. Rows with NULL in any stratum column are excluded
+    escalates x4 on deficiency — astronomically rare with uniform keys.
+    The escalation is bounded: once every threshold reaches 1.0 the
+    attempt admits every [0, 1] key, is exact by construction and returns
+    unchecked. Rows with NULL in any stratum column are excluded
     (documented; an equality join drops them).
     """
     u = (order_col if order_col is not None else keyed_uniform(seed, F.col(key_col)))
@@ -136,28 +138,34 @@ def stratified_sample_exact(
     spark = df.sparkSession
     if not counts:  # empty input / all-NULL strata: empty result, same schema
         return dfu.withColumn("_rk", F.lit(1)).where(F.lit(False)).drop("_u")
+    nn = F.lit(True)
+    for c in strata_cols:  # join semantics: NULL strata excluded
+        nn = nn & F.col(c).isNotNull()
+    # The literal map is keyed by Python str(v), which equals Spark's
+    # cast("string") only for string columns (not True/true, 1e-05/1.0E-5).
+    string_strata = all(
+        isinstance(df.schema[c].dataType, T.StringType) for c in strata_cols
+    )
     factor = 8.0
     while True:
-        # Threshold lookup. For bounded strata counts the thresholds are
+        last = factor * n_per >= max(counts.values())
+        # Threshold lookup. For bounded string strata the thresholds are
         # embedded as a literal MAP expression — zero extra jobs, no
         # createDataFrame round-trip, no join (the driver-side
         # createDataFrame + broadcast-join pair cost two plan subtrees and
         # a broadcast exchange per attempt; the map lookup is a row-local
-        # projection). Very-high-cardinality strata fall back to the
-        # broadcast join (a giant literal map would bloat the plan).
-        if len(counts) <= 4096:
+        # projection). Very-high-cardinality or non-string strata fall back
+        # to the broadcast join (a giant literal map would bloat the plan).
+        if last:
+            sel = dfu.where(nn & (F.col("_u") <= 1.0))
+        elif string_strata and len(counts) <= 4096:
             sep = "\x00"  # never occurs in real stratum values
             entries = []
             for s, cnt in counts.items():
-                entries.append(F.lit(sep.join(str(v) for v in s)))
+                entries.append(F.lit(sep.join(s)))
                 entries.append(F.lit(min(1.0, factor * n_per / cnt)))
             thr_map = F.create_map(*entries)
-            key = F.concat_ws(
-                sep, *[F.col(c).cast("string") for c in strata_cols]
-            )
-            nn = F.lit(True)
-            for c in strata_cols:  # join semantics: NULL strata excluded
-                nn = nn & F.col(c).isNotNull()
+            key = F.concat_ws(sep, *[F.col(c) for c in strata_cols])
             sel = dfu.where(nn & (F.col("_u") <= thr_map[key]))
         else:
             thr = spark.createDataFrame(
@@ -171,6 +179,8 @@ def stratified_sample_exact(
         picked = sel.withColumn("_rk", F.row_number().over(w)).where(
             F.col("_rk") <= n_per
         )
+        if last:
+            return picked.drop("_u")
         got = {
             tuple(r[c] for c in strata_cols): r["cnt"]
             for r in picked.groupBy(*strata_cols)

@@ -5,12 +5,15 @@ masked spans, code/dedup2.py:18,235-246): two documents that share one long
 verbatim substring are duplicates-in-part even when whole-document Jaccard
 is below threshold (a press release quoted inside distinct articles).
 
-Physical shape: the candidate pair list joins back to text ONCE
-(sort-merge join on id), then ``applyInPandas`` per bounded group runs an
-O(n log n) suffix-array (prefix-doubling, pure numpy) over the concatenation
-of the two docs and scans adjacent suffix pairs from different docs for the
-longest cross-document LCP. Group sizes are bounded by the LSH bucket caps,
-so no group explodes an executor.
+Physical shape: the candidate pair list joins back to text once per side,
+is hash-spread on (id_a, id_b) over ``spark.sql.shuffle.partitions``
+partitions, and a per-row ``mapInPandas`` kernel runs an O(n log^2 n)
+suffix array (prefix doubling, pure numpy) over the concatenation of the
+two docs and scans adjacent suffix pairs from different docs for the
+longest cross-document LCP. The pair rows are small (ids plus text) but
+each costs a numpy suffix-array build, so the spread is a fixed-count
+repartition that adaptive execution may not coalesce: every core runs the
+kernel instead of one merged task.
 
 The same kernel, run on a single document against itself, finds internal
 repeats — the reference's internal-vs-global repeat discrimination
@@ -26,122 +29,147 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+# symbols packed into the first sort key: 7 x 9 bits fit a non-negative
+# int64, so one sort ranks 7-symbol prefixes and the doubling starts there
+_PACK = 7
+
+
 def _suffix_array_ranks(
     data: np.ndarray,
 ) -> tuple[np.ndarray, list[tuple[int, np.ndarray]]]:
     """Prefix-doubling suffix array (O(n log^2 n)) + rank history.
 
-    Returns (sa, ranks) where ranks is [(width, r)] and r[i] == r[j] iff
-    data[i:i+width] == data[j:j+width] — the sparse table the vectorized
-    LCP walk consumes (no per-character Python loop anywhere).
+    ``data`` holds symbols in [0, 511): UTF-8 bytes plus out-of-alphabet
+    separators. Returns (sa, ranks) where ranks is [(width, r)] with widths
+    _PACK * 2^m ascending, r[i] == r[j] iff data[i:i+width] ==
+    data[j:j+width] (windows running past the end are padded below every
+    symbol), and r[n] == -1 is an end sentinel no rank equals — the sparse
+    table the vectorized LCP walks consume (no per-character Python loop).
     """
     n = len(data)
     if n == 0:
         return np.empty(0, dtype=np.int64), []
-    order = np.argsort(data, kind="stable")
-    r = np.empty(n, dtype=np.int64)
-    r[order] = np.cumsum(
-        np.concatenate(([0], (np.diff(data[order]) != 0).astype(np.int64)))
-    )
-    ranks: list[tuple[int, np.ndarray]] = [(1, r.astype(np.int32))]
-    k = 1
-    while k < n:
-        key2 = np.full(n, -1, dtype=np.int64)
-        key2[: n - k] = r[k:]
-        comp = r * (n + 1) + (key2 + 1)
-        order = np.argsort(comp, kind="stable")
-        newr = np.empty(n, dtype=np.int64)
-        newr[order] = np.cumsum(
-            np.concatenate(([0], (np.diff(comp[order]) != 0).astype(np.int64)))
-        )
-        r = newr
-        k *= 2
-        ranks.append((k, r.astype(np.int32)))
+    padded = np.zeros(n + _PACK - 1, dtype=np.int64)
+    padded[:n] = data + 1
+    key = np.zeros(n, dtype=np.int64)
+    for t in range(_PACK):
+        key = (key << 9) | padded[t : t + n]
+    ranks: list[tuple[int, np.ndarray]] = []
+    k = _PACK
+    while True:
+        # no stable sort: a rank depends only on the key value and the loop
+        # stops once every rank is distinct, so tie order never shows in
+        # the ranks or the suffix array
+        order = np.argsort(key)
+        sorted_key = key[order]
+        r = np.empty(n, dtype=np.int64)
+        r[order[0]] = 0
+        r[order[1:]] = np.cumsum(sorted_key[1:] != sorted_key[:-1])
+        table = np.empty(n + 1, dtype=np.int32)
+        table[:n] = r
+        table[n] = -1
+        ranks.append((k, table))
+        # every rank distinct; at the latest once k >= n, because padded
+        # windows of different suffixes then differ in length
         if r[order[-1]] == n - 1:
             break
+        key2 = np.full(n, -1, dtype=np.int64)
+        key2[: n - k] = r[k:]
+        key = r * (n + 1) + (key2 + 1)
+        k *= 2
     sa = np.empty(n, dtype=np.int64)
     sa[r] = np.arange(n)
     return sa, ranks
 
 
-def suffix_array(data: np.ndarray) -> np.ndarray:
-    """Prefix-doubling suffix array over an int array (O(n log^2 n))."""
-    return _suffix_array_ranks(data)[0]
-
-
-def _lcp_from_ranks(
-    n: int, sa: np.ndarray, ranks: list[tuple[int, np.ndarray]]
-) -> np.ndarray:
-    """Vectorized LCP of adjacent SA entries via the doubling rank table.
+def suffix_array_and_lcp(data: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(sa, lcp) from one prefix-doubling pass; lcp[k] is the LCP of the
+    suffixes at sa[k - 1] and sa[k] (lcp[0] == 0).
 
     Classic sparse-table walk, batched over all n-1 adjacent pairs at once:
     descend widths; wherever rank_w[i] == rank_w[j] the pair shares a
-    w-prefix — advance both cursors by w and accumulate. O(n log n) numpy,
-    replacing the one-char-per-Python-iteration Kasai loop that dominated
-    the substring stage at scale.
-    """
+    w-prefix — advance both cursors by w. The remainder below the smallest
+    width is matched symbol by symbol (< _PACK steps). Matching windows
+    never run past the end, so cursors stay <= n, where the sentinels
+    (rank -1, symbol -1) stop them."""
+    sa, ranks = _suffix_array_ranks(data)
+    n = len(data)
+    lcp = np.zeros(n, dtype=np.int64)
     if n < 2:
-        return np.zeros(n, dtype=np.int64)
+        return sa, lcp
     i = sa[1:].copy()
     j = sa[:-1].copy()
-    h = np.zeros(n - 1, dtype=np.int64)
+    h = lcp[1:]
     for w, r in reversed(ranks):
-        alive = (i + w <= n) & (j + w <= n)
-        if not alive.any():
-            continue
-        eq = alive.copy()
-        eq[alive] = r[i[alive]] == r[j[alive]]
+        eq = r[i] == r[j]
         h[eq] += w
         i[eq] += w
         j[eq] += w
-    lcp = np.zeros(n, dtype=np.int64)
-    lcp[1:] = h
-    return lcp
+    sym = np.append(data, -1)
+    for _ in range(_PACK - 1):
+        eq = sym[i] == sym[j]
+        h[eq] += 1
+        i[eq] += 1
+        j[eq] += 1
+    return sa, lcp
 
 
-def lcp_array(data: np.ndarray, sa: np.ndarray) -> np.ndarray:
-    """LCP of adjacent suffixes in SA order (vectorized, see _lcp_from_ranks).
+def _max_lcp(
+    data: np.ndarray,
+    ranks: list[tuple[int, np.ndarray]],
+    i: np.ndarray,
+    j: np.ndarray,
+) -> int:
+    """Largest LCP among the suffix pairs (i[k], j[k]).
 
-    Recomputes the rank table from `data` (the passed sa is only used for
-    adjacency order) — callers that need both should use
-    suffix_array_and_lcp, which builds the rank table once."""
-    _, ranks = _suffix_array_ranks(data)
-    return _lcp_from_ranks(len(data), sa, ranks)
+    A binary search over the sparse table: all pairs still tied for the
+    maximum share the same matched length h, so each width keeps only the
+    pairs that match it (when any does) — no per-pair LCP array."""
+    if not len(i):
+        return 0
+    h = 0
+    for w, r in reversed(ranks):
+        eq = r[i + h] == r[j + h]
+        if eq.any():
+            i, j, h = i[eq], j[eq], h + w
+    sym = np.append(data, -1)
+    for _ in range(_PACK - 1):
+        eq = sym[i + h] == sym[j + h]
+        if not eq.any():
+            break
+        i, j, h = i[eq], j[eq], h + 1
+    return h
 
 
-def suffix_array_and_lcp(data: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(sa, lcp) from ONE prefix-doubling pass — the suffix_array() +
-    lcp_array() call sequence runs the O(n log^2 n) doubling twice; every
-    hot kernel below uses this combined entry point instead."""
-    sa, ranks = _suffix_array_ranks(data)
-    return sa, _lcp_from_ranks(len(data), sa, ranks)
+def _utf8_symbols(text: str) -> np.ndarray:
+    return np.frombuffer(text.encode("utf-8"), dtype=np.uint8).astype(np.int64)
 
 
 def longest_common_substring_len(a: str, b: str) -> int:
-    """Longest verbatim substring shared by a and b (suffix array + LCP)."""
+    """Longest verbatim substring shared by a and b, in UTF-8 bytes
+    (suffix array + max cross-document LCP)."""
     if not a or not b:
         return 0
-    xa = np.frombuffer(a.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-    xb = np.frombuffer(b.encode("utf-8"), dtype=np.uint8).astype(np.int64)
+    xa = _utf8_symbols(a)
     sep = np.array([256], dtype=np.int64)  # out-of-alphabet separator
-    data = np.concatenate([xa, sep, xb])
+    data = np.concatenate([xa, sep, _utf8_symbols(b)])
     na = len(xa)
     sa, ranks = _suffix_array_ranks(data)
-    lcp = _lcp_from_ranks(len(data), sa, ranks)
-    # adjacent suffixes from different docs (separator belongs to neither)
+    # adjacent suffixes from different docs (separator belongs to neither):
+    # the best cross pair is adjacent to some cross pair in SA order
     from_a = sa < na
     from_b = sa > na
     cross = (from_a[1:] & from_b[:-1]) | (from_b[1:] & from_a[:-1])
-    return int(lcp[1:][cross].max()) if cross.any() else 0
+    return _max_lcp(data, ranks, sa[1:][cross], sa[:-1][cross])
 
 
 def longest_self_repeat_len(a: str) -> int:
     """Longest substring occurring >= twice within one document (max LCP)."""
     if not a:
         return 0
-    data = np.frombuffer(a.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-    _, lcp = suffix_array_and_lcp(data)
-    return int(lcp.max()) if len(lcp) else 0
+    data = _utf8_symbols(a)
+    sa, ranks = _suffix_array_ranks(data)
+    return _max_lcp(data, ranks, sa[1:], sa[:-1])
 
 
 def anchor_candidate_pairs(
@@ -335,9 +363,10 @@ def exact_substring_pairs(
                 {"id_a": pdf["id_a"], "id_b": pdf["id_b"], "lcs_len": lens}
             )
 
-    # the kernel is per-ROW (each pair independent), so mapInPandas — no
-    # group key, no shuffle, and parallelism scales with input partitions
-    # instead of a fixed bucket constant. Arrow batches bound memory; the
-    # upstream pair join already spread pairs across partitions.
-    out = joined.mapInPandas(_kernel, schema)
+    # the kernel is per-row (each pair independent), so mapInPandas with no
+    # group key. The joined rows are a few MB, so adaptive execution would
+    # coalesce them into one partition and run the CPU-bound kernel as one
+    # task; repartition(n, cols) is a fixed-count exchange it never merges.
+    n = int(pages.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    out = joined.repartition(n, "id_a", "id_b").mapInPandas(_kernel, schema)
     return out.withColumn("is_substring_dup", F.col("lcs_len") >= F.lit(min_len))

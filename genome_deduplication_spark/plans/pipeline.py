@@ -102,16 +102,18 @@ def dedup_pipeline(
             resumed.add(name)
         return described(name, lambda: ctx.stage(name, build))
 
-    def metrics(name: str, guard_stage: str | None = None, **kv):
-        # kv values are thunks — only evaluated (each is a Spark job) when a
-        # run context is recording lineage. guard_stage makes the block
-        # exactly-once across resumes: a stage reused from its checkpoint
-        # already wrote its metrics in the run that built it, so re-running
-        # the (Spark-job) thunks would both waste jobs and append duplicate
-        # rows (record_metrics also replaces per-stage, as defense in depth).
-        if ctx is None or (guard_stage is not None and guard_stage in resumed):
+    def metrics(name: str, guard_stage: str, build):
+        # build() returns the stage's metrics and only runs when a run
+        # context records lineage. Row totals come from the stage manifests
+        # (ctx.stage_rows: write_stage's lineage job counted them already);
+        # a filtered count is one aggregate over the stage. guard_stage makes
+        # the block exactly-once across resumes: a stage reused from its
+        # checkpoint already wrote its metrics in the run that built it, so
+        # re-running build() would waste jobs and append duplicate rows
+        # (record_metrics also replaces per-stage, as defense in depth).
+        if ctx is None or guard_stage in resumed:
             return
-        ctx.record_metrics(name, {k: v() for k, v in kv.items()})
+        ctx.record_metrics(name, build())
 
     # -- 1 normalize ----------------------------------------------------------
     # the reference's parse+clean entry (code/dedup2.py:461-468): when the
@@ -139,13 +141,17 @@ def dedup_pipeline(
     normalized = stage("normalize", _normalize)
     docs = normalized.where(~F.col("is_ambiguous")).drop("is_ambiguous")
     ambiguous = normalized.where(F.col("is_ambiguous"))
-    metrics(
-        "normalize",
-        guard_stage="normalize",
-        docs_in=pages.count,
-        docs_ok=docs.count,
-        docs_ambiguous=ambiguous.count,
-    )
+
+    def _normalize_metrics():
+        docs_in = ctx.stage_rows("normalize")
+        n_amb = normalized.agg(F.count_if("is_ambiguous")).first()[0]
+        return {
+            "docs_in": docs_in,
+            "docs_ok": docs_in - n_amb,
+            "docs_ambiguous": n_amb,
+        }
+
+    metrics("normalize", "normalize", _normalize_metrics)
 
     # -- 2 signatures ----------------------------------------------------------
     # one Arrow pass per document computes shingles (O(n) rolling hash),
@@ -171,7 +177,11 @@ def dedup_pipeline(
         )
 
     signatures = stage("signatures", _signatures)
-    metrics("signatures", guard_stage="signatures", signatures_out=signatures.count)
+    metrics(
+        "signatures",
+        "signatures",
+        lambda: {"signatures_out": ctx.stage_rows("signatures")},
+    )
 
     # -- 3 candidates ----------------------------------------------------------
     # exact-duplicate short-circuit: identical content hash is a sure edge —
@@ -271,8 +281,8 @@ def dedup_pipeline(
         ctx.record_metrics(
             "candidates",
             {
-                "exact_edges": exact_edges.count(),
-                "lsh_candidate_pairs": lsh_pairs.count(),
+                "exact_edges": ctx.stage_rows("exact_edges"),
+                "lsh_candidate_pairs": ctx.stage_rows("lsh_pairs"),
                 "lsh_buckets_total": trunc["buckets_total"],
                 "lsh_buckets_dropped": trunc["buckets_dropped"] or 0,
                 "lsh_buckets_capped": trunc["buckets_capped"] or 0,
@@ -323,9 +333,11 @@ def dedup_pipeline(
     dup_edges = verified.where("is_dup").select("id_a", "id_b")
     metrics(
         "verify",
-        guard_stage="verified",
-        pairs_in=verified.count,
-        pairs_dup=dup_edges.count,
+        "verified",
+        lambda: {
+            "pairs_in": ctx.stage_rows("verified"),
+            "pairs_dup": verified.agg(F.count_if("is_dup")).first()[0],
+        },
     )
 
     # -- 5 substring pass ---------------------------------------------------------
@@ -344,9 +356,13 @@ def dedup_pipeline(
         substr_edges = substr.where("is_substring_dup").select("id_a", "id_b")
         metrics(
             "substring",
-            guard_stage="substring",
-            pairs_checked=substr.count,
-            pairs_substring_dup=substr_edges.count,
+            "substring",
+            lambda: {
+                "pairs_checked": ctx.stage_rows("substring"),
+                "pairs_substring_dup": substr.agg(
+                    F.count_if("is_substring_dup")
+                ).first()[0],
+            },
         )
     else:
         substr = None
@@ -376,9 +392,13 @@ def dedup_pipeline(
     clusters = stage("clusters", _clusters)
     metrics(
         "clusters",
-        guard_stage="clusters",
-        docs_clustered=clusters.count,
-        n_clusters=clusters.select("cluster_id").distinct().count,
+        "clusters",
+        lambda: {
+            "docs_clustered": ctx.stage_rows("clusters"),
+            "n_clusters": clusters.agg(
+                F.count_distinct("cluster_id")
+            ).first()[0],
+        },
     )
 
     return {

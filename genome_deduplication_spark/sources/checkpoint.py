@@ -105,6 +105,12 @@ class RunContext:
         os.replace(tmp, self._manifest_path(stage))  # atomic completion marker
         return out
 
+    def stage_rows(self, stage: str) -> int:
+        """Row total of a completed stage, from its manifest: write_stage's
+        lineage job already counted it, so a metric needs no scan."""
+        with open(self._manifest_path(stage)) as f:
+            return int(json.load(f)["rows"])
+
     def read_stage(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self._data_path(stage))
 

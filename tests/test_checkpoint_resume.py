@@ -9,7 +9,13 @@ import shutil
 import pytest
 
 from genome_deduplication_spark.config import DedupConfig
-from genome_deduplication_spark.fixtures.pages import fx_exact, fx_near, pages_df
+from genome_deduplication_spark.fixtures.pages import (
+    fx_ambiguous,
+    fx_exact,
+    fx_near,
+    fx_substring,
+    pages_df,
+)
 from genome_deduplication_spark.plans.pipeline import dedup_pipeline
 from genome_deduplication_spark.sources.checkpoint import RunContext
 
@@ -99,6 +105,48 @@ def test_metrics_exactly_once_on_resume(spark, tmp_path):
     assert rows_second == rows_first
     names = [m["stage"] for m in rows_second]
     assert len(names) == len(set(names)), f"duplicate metric rows: {names}"
+
+
+def test_metrics_equal_direct_counts(spark, tmp_path):
+    """Each metrics.jsonl value (manifest row totals plus one aggregate per
+    stage) equals a direct count() over the returned stage tables."""
+    corpus = _corpus()
+    corpus.extend(fx_substring(seed=42, pairs=4))
+    corpus.extend(fx_ambiguous(seed=42, docs=6))
+    df = pages_df(spark, corpus)
+    run_dir = str(tmp_path / "run")
+    t = dedup_pipeline(df, CFG, run_dir=run_dir)
+    ctx = RunContext(spark, run_dir, CFG.to_json())
+    got = {m.pop("stage"): m for m in ctx.read_metrics()}
+    verified, substr, clusters = t["verified"], t["substring"], t["clusters"]
+    want = {
+        "normalize": {
+            "docs_in": df.count(),
+            "docs_ok": t["normalized"].where("NOT is_ambiguous").count(),
+            "docs_ambiguous": t["ambiguous"].count(),
+        },
+        "signatures": {"signatures_out": t["signatures"].count()},
+        "verify": {
+            "pairs_in": verified.count(),
+            "pairs_dup": verified.where("is_dup").count(),
+        },
+        "substring": {
+            "pairs_checked": substr.count(),
+            "pairs_substring_dup": substr.where("is_substring_dup").count(),
+        },
+        "clusters": {
+            "docs_clustered": clusters.count(),
+            "n_clusters": clusters.select("cluster_id").distinct().count(),
+        },
+    }
+    for stage, kv in want.items():
+        assert got[stage] == kv, stage
+    assert got["candidates"]["exact_edges"] == t["exact_edges"].count()
+    assert got["candidates"]["lsh_candidate_pairs"] == t["lsh_pairs"].count()
+    # the fixture exercises every filtered count
+    assert got["normalize"]["docs_ambiguous"] > 0
+    assert got["verify"]["pairs_dup"] > 0
+    assert got["substring"]["pairs_substring_dup"] > 0
 
 
 def test_per_partition_lineage_counters(spark, tmp_path):

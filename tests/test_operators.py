@@ -175,6 +175,98 @@ def test_suffix_array_lcs():
     assert longest_self_repeat_len("abcd") == 0
 
 
+def _common_suffix_max(a: bytes, b: bytes, self_pairs: bool) -> int:
+    """Brute-force DP: longest common substring of a and b; with
+    ``self_pairs`` (b is a) only position pairs i < j count, which gives
+    the longest substring occurring twice (overlaps allowed)."""
+    best = 0
+    prev = [0] * (len(b) + 1)
+    for i, x in enumerate(a, 1):
+        cur = [0] * (len(b) + 1)
+        for j, y in enumerate(b, 1):
+            if x == y and (not self_pairs or i < j):
+                cur[j] = prev[j - 1] + 1
+                best = max(best, cur[j])
+        prev = cur
+    return best
+
+
+def test_suffix_array_kernels_match_brute_force():
+    """Suffix array, LCP, LCS and self-repeat lengths (UTF-8 bytes) equal
+    brute force on seeded random short strings, empty and
+    one-character-run strings and multi-byte text: tie order in the
+    doubling sorts must not matter."""
+    import os
+    import random
+
+    import numpy as np
+
+    from genome_deduplication_spark.operators.suffix_array import (
+        suffix_array_and_lcp,
+    )
+
+    rng = random.Random(1234)
+    alphabets = ["ab", "abc ", "aaaab", "é日🙂a", "xyzéè"]
+    # long runs and NUL bytes reach the end-of-data sentinels
+    strings = ["", "a", "a" * 40, "b" + "a" * 30, "\x00" * 20, "ab\x00" * 9,
+               "日日日日", "🙂🙂🙂", "ééé"]
+    while len(strings) < 200:
+        alpha = rng.choice(alphabets)
+        strings.append("".join(rng.choice(alpha) for _ in range(rng.randint(0, 40))))
+    for i, a in enumerate(strings):
+        b = strings[(i * 7 + 3) % len(strings)]
+        ab, bb = a.encode("utf-8"), b.encode("utf-8")
+        assert longest_common_substring_len(a, b) == _common_suffix_max(
+            ab, bb, False
+        ), (a, b)
+        assert longest_self_repeat_len(a) == _common_suffix_max(ab, ab, True), a
+        sa, lcp = suffix_array_and_lcp(np.frombuffer(ab, dtype=np.uint8).astype(np.int64))
+        want_sa = sorted(range(len(ab)), key=lambda k: ab[k:])
+        assert sa.tolist() == want_sa, a
+        want_lcp = [
+            len(os.path.commonprefix([ab[x:], ab[y:]]))
+            for x, y in zip(want_sa, want_sa[1:])
+        ]
+        assert lcp.tolist() == ([0] + want_lcp)[: len(ab)], a
+
+
+def test_exact_substring_pairs_spreads_kernel_over_shuffle_partitions(spark):
+    """The LCS kernel sits above a fixed-count hash exchange on (id_a,
+    id_b) with spark.sql.shuffle.partitions partitions, which adaptive
+    execution must not coalesce even for a tiny pair set."""
+    import re
+
+    from genome_deduplication_spark.operators.suffix_array import (
+        exact_substring_pairs,
+    )
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    shared = "the quick brown fox jumps over the lazy dog " * 3
+    pages = spark.createDataFrame(
+        [(f"u{i}", f"doc {i} prefix {shared if i % 2 else ''} tail {i}")
+         for i in range(6)],
+        "url string, text string",
+    )
+    want = {
+        ("u1", "u3", True), ("u1", "u5", True), ("u3", "u5", True),
+        ("u0", "u1", False), ("u0", "u2", False),
+    }
+    pairs = spark.createDataFrame(
+        [(a, b) for a, b, _ in want], "id_a string, id_b string"
+    )
+    out = exact_substring_pairs(pairs, pages, min_len=len(shared))
+    assert {
+        (r["id_a"], r["id_b"], r["is_substring_dup"]) for r in out.collect()
+    } == want
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.search(
+        r"MapInPandas(.|\n)*Exchange hashpartitioning\(id_a#\d+, id_b#\d+, %d\)"
+        % n,
+        plan,
+    ), plan
+    assert out.rdd.getNumPartitions() == n
+
+
 def test_train_dev_split_deterministic(spark):
     df = spark.createDataFrame([(f"u{i}",) for i in range(100)], "url string")
     s1 = train_dev_split(df, 0.2, 10, seed=123)
@@ -398,10 +490,11 @@ def test_stratified_sample_prunes_before_window(spark):
     literal_map = "map(" in plan and "_u" in plan
     joined = "_thr" in plan and "BroadcastHashJoin" in plan
     assert literal_map or joined, plan
-    # and the window must NOT consume the raw corpus: a Filter sits below it
+    # and the window must NOT consume the raw corpus: the threshold
+    # Filter sits below it
     import re
 
-    assert re.search(r"Window .*\n(.|\n)*Filter", plan) or "Filter" in plan, plan
+    assert re.search(r"Window \[(.|\n)*Filter .*<= (map\(keys:|_thr#)", plan), plan
 
 
 def test_get_json_object_rollup_handles_malformed_and_missing(spark):
@@ -423,6 +516,26 @@ def test_get_json_object_rollup_handles_malformed_and_missing(spark):
         F.count(F.lit(1)).alias("n"), F.sum(k).alias("s"), F.max(k).alias("m")
     ).collect()[0]
     assert (row["n"], row["s"], row["m"]) == (5, 8, 5)
+
+
+def test_stratified_sample_bool_and_float_strata(spark):
+    """Non-string strata (True vs Spark's 'true', 1e-05 vs '1.0E-5') keep
+    every stratum and finish: exactly min(n_per, |stratum|) each."""
+    from genome_deduplication_spark.operators.split import stratified_sample_exact
+
+    df = spark.createDataFrame(
+        [(f"u{i}", i % 2 == 0, [1e-05, 2.5, -0.5][i % 3]) for i in range(600)],
+        "url string, flag boolean, w double",
+    )
+    for strata in (["flag"], ["w"], ["flag", "w"]):
+        out = stratified_sample_exact(df, 4, 3, strata, key_col="url")
+        sizes = {
+            tuple(r[:-1]): r[-1]
+            for r in out.groupBy(*strata).count().collect()
+        }
+        want = {tuple(r[:-1]) for r in df.groupBy(*strata).count().collect()}
+        assert set(sizes) == want, strata
+        assert set(sizes.values()) == {4}, strata
 
 
 def test_stratified_sample_empty_input_and_all_null_strata(spark):
