@@ -64,13 +64,18 @@ class DedupConfig:
             )
 
     def anchor_width(self) -> int:
-        """Width (bytes) of exact-substring anchor windows — wide enough to
-        be discriminative on low-entropy text (see suffix_array docstring)."""
+        """Width (bytes) of exact-substring anchor windows: 9-byte windows
+        collide corpus-wide on common phrases, a 48-byte exact match between
+        non-duplicates is vanishingly rare (the reference picks k=32 over a
+        4-letter alphabet for the same reason, code/dedup2.py:576)."""
         return max(self.shingle_k, min(48, self.min_common_substring // 2))
 
     def anchor_modulus(self) -> int:
-        """Anchor sampling modulus: ~4 expected anchors per true
-        min_common_substring overlap."""
+        """Anchor sampling modulus m: only windows whose hash % m == 0 are
+        indexed (winnowing-style, deterministic). A shared substring of
+        min_common_substring bytes holds ``window`` consecutive anchor-width
+        windows, so m = window / 4 gives ~4 expected shared anchors and a
+        miss probability (1 - 1/m)^window ~ e^-4 < 2%."""
         window = max(self.min_common_substring - self.anchor_width() + 1, 1)
         return max(window // 4, 1)
 
@@ -96,9 +101,6 @@ class DedupConfig:
     @staticmethod
     def from_json(s: str) -> "DedupConfig":
         return DedupConfig(**json.loads(s))
-
-
-DEFAULT_CONFIG = DedupConfig()
 
 
 def lsh_threshold_curve(cfg: DedupConfig, jaccard: float) -> float:

@@ -18,10 +18,9 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-from genome_deduplication_spark.config import MERSENNE31
+from pyspark.sql import types as T
 
 
 def hash60(col: Column) -> Column:
@@ -56,10 +55,39 @@ def hash128(col: Column) -> Column:
     return F.unhex(F.md5(col))
 
 
-def hash31(col: Column) -> Column:
-    """Portable hash reduced mod 2**31-1 (MinHash input domain)."""
-    return hash60(col) % F.lit(MERSENNE31)
+def compact_key(df: DataFrame, id_col: str) -> Column | None:
+    """The key a pair-generating operator shuffles in place of ``id_col``:
+    :func:`hash128` of the id for string ids, None when the ids are not
+    strings (already compact — the operator keys on them directly).
+
+    Every row of a bucket explode, member sort and pair dedup carries the
+    key. String ids (urls, ~40-80 B) would dominate those shuffled bytes,
+    and a saturated host pays for shuffle/sort bytes with a hard aggregate
+    memory-bandwidth cap (BENCH.md round 5: ~13-22 GB/s total regardless
+    of worker count). So the operator runs on 16-byte keys and only the
+    final, small pair set goes back to real ids
+    (:func:`key_pairs_to_ids`)."""
+    if isinstance(df.schema[id_col].dataType, T.StringType):
+        return hash128(F.col(id_col))
+    return None
 
 
-def hash31_py(s: str) -> int:
-    return hash60_py(s) % MERSENNE31
+def key_pairs_to_ids(pairs: DataFrame, idmap: DataFrame, key_col: str,
+                     id_col: str) -> DataFrame:
+    """(id_a, id_b) pairs of :func:`compact_key` keys -> (id_a < id_b)
+    pairs of real ids, through ``idmap(key_col, id_col)``.
+
+    One join per side; the map is one row per key, broadcastable at bench
+    scale and a plain shuffle join of pair-cardinality rows at cluster
+    scale. Pairs are re-oriented in id space: the operator ordered them by
+    key, which is not the id order."""
+    map_a = idmap.select(F.col(key_col).alias("id_a"), F.col(id_col).alias("_ia"))
+    map_b = idmap.select(F.col(key_col).alias("id_b"), F.col(id_col).alias("_ib"))
+    return (
+        pairs.join(map_a, "id_a")
+        .join(map_b, "id_b")
+        .select(
+            F.least("_ia", "_ib").alias("id_a"),
+            F.greatest("_ia", "_ib").alias("id_b"),
+        )
+    )

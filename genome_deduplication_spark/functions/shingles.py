@@ -1,20 +1,22 @@
 """Shingle extraction — the reimplementation of the reference k-mer inner
 loop (all overlapping k-substrings, code/dedup2.py:135-139).
 
-Three interchangeable kernels:
+One hash family: a polynomial rolling hash over UTF-8 byte windows, mod
+2**31-1 (the MinHash input domain), O(n) per document.
 
-* :func:`char_shingles31` — JVM-side Column expression (portable md5-derived
-  hashes mod 2**31-1). O(n*k) but fully inside whole-stage codegen and
-  reproducible by the DuckDB oracle + pure-Python oracle. Default.
-* :func:`char_shingles64` — JVM-side xxhash64 variant (scale path when no
-  external oracle must reproduce values; 64-bit space).
-* :func:`char_shingles31_pandas` — Arrow-batched numpy rolling polynomial
-  hash, O(n) per document: the kernel for very long documents where O(n*k)
-  substring hashing dominates. Uses its own deterministic polynomial family
-  (mirrored by the Python oracle) — do not mix families within one run.
+* :func:`poly_window_hashes_batched` — the batch kernel the signature UDF
+  (functions.signatures.make_doc_signature_udf) runs: documents are
+  concatenated into L2-sized groups and every window width derives from
+  one shared modular prefix sum (:func:`poly_window_hashes_multi`).
+* :func:`poly_window_hashes_np` — the per-document kernel (k vectorized
+  passes), the reference the batch kernel is property-tested against.
+* :func:`make_char_shingles31_pandas` — Arrow UDF of the distinct shingle
+  set, for the shingle queries of ``__spark_entry__``.
+* :func:`poly_shingles31_py` — the pure-Python twin (the DuckDB oracle
+  recomputes the same values in SQL).
 
-All kernels emit the *distinct* shingle set (set semantics, matching the
-reference's set membership model, code/dedup2.py:142).
+Shingle sets are *distinct* (set semantics, matching the reference's set
+membership model, code/dedup2.py:142).
 """
 
 from __future__ import annotations
@@ -23,60 +25,18 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from genome_deduplication_spark.config import MERSENNE31
 
-_M61 = (1 << 61) - 1
 _POLY_BASE = 1315423911  # deterministic polynomial base for the numpy kernel
 
 
-def _positions(col: Column, k: int) -> Column:
-    # 1-based start positions of every k-window; empty when len(text) < k.
-    # NB: F.sequence(1, 0) yields a DESCENDING [1, 0] in Spark, so the
-    # short-text case must be handled explicitly, not via greatest().
-    return F.when(
-        F.length(col) >= k, F.sequence(F.lit(1), F.length(col) - F.lit(k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-
-
-def char_shingles31(col: Column, k: int) -> Column:
-    """array<long> of distinct md5-derived shingle hashes mod 2**31-1."""
-    sh = F.transform(
-        _positions(col, k),
-        lambda i: F.conv(F.substring(F.md5(F.substring(col, i, k)), 1, 15), 16, 10)
-        .cast("long")
-        % F.lit(MERSENNE31),
-    )
-    return F.array_distinct(sh)
-
-
-def char_shingles64(col: Column, k: int) -> Column:
-    """array<long> of distinct xxhash64 shingle hashes (scale path)."""
-    sh = F.transform(_positions(col, k), lambda i: F.xxhash64(F.substring(col, i, k)))
-    return F.array_distinct(sh)
-
-
-def word_shingles(col: Column, n: int) -> Column:
-    """array<string> of distinct n-word shingles of normalized text."""
-    words = F.split(col, " ")
-    sh = F.transform(
-        F.when(
-            F.size(words) >= n, F.sequence(F.lit(0), F.size(words) - F.lit(n))
-        ).otherwise(F.array().cast("array<int>")),
-        lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-    )
-    return F.array_distinct(sh)
-
-
 def make_char_shingles31_pandas(k: int):
-    """Arrow-batched O(n) rolling-hash shingle kernel.
-
-    Polynomial rolling hash over UTF-8 bytes in the 2**61-1 Mersenne field,
-    reduced to 2**31-1 at the end. Matches
-    :func:`genome_deduplication_spark.oracle.poly_shingles_py`.
+    """Arrow-batched O(n) rolling-hash shingle kernel: text ->
+    array<long> of distinct k-byte window hashes mod 2**31-1. Matches
+    :func:`poly_shingles31_py`.
     """
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -267,9 +227,6 @@ def poly_shingles31_py(text: str, k: int) -> set[int]:
 
 
 __all__ = [
-    "char_shingles31",
-    "char_shingles64",
-    "word_shingles",
     "make_char_shingles31_pandas",
     "poly_window_hashes_np",
     "poly_shingles31_py",

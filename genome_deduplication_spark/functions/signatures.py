@@ -1,10 +1,14 @@
-"""Fused signature kernel: one Arrow pass computing MinHash + SimHash.
+"""The signature kernel: one Arrow pass from normalized text to shingle
+count, MinHash, SimHash and substring anchors.
 
-Running MinHash and SimHash as separate pandas UDFs deserializes the (large)
-shingle column twice and boxes every output value into Python ints via
-tolist(); fused, the shingle batch crosses the Arrow boundary once and all
-outputs stay numpy until Arrow serialization. Same arithmetic as
-functions.minhash / functions.simhash (property-tested equal).
+Every near-dup path (pipeline, tiers, incremental, streaming) calls
+:func:`make_doc_signature_udf`. Fusing the stages means the text crosses
+the Arrow boundary once and all outputs stay numpy until Arrow
+serialization — separate shingle / MinHash / SimHash UDFs would
+deserialize the (large) shingle column once per stage and box every
+output value into Python ints. The arithmetic is that of the pure-Python
+twins (functions.shingles.poly_shingles31_py, functions.minhash.minhash_py,
+functions.simhash.simhash_py), which the kernel tests compare it against.
 """
 
 from __future__ import annotations
@@ -114,17 +118,16 @@ def make_doc_signature_udf(cfg: DedupConfig):
     minhash, simhash, anchors).
 
     Everything per-document happens in a single Arrow round trip:
-    * O(n) polynomial rolling shingle hashes (numpy, k vectorized passes)
-      — replaces the O(n*k) JVM md5 path in the hot pipeline (the md5
-      family remains the cross-engine-portable path for oracle queries);
+    * O(n) polynomial rolling shingle hashes over UTF-8 bytes (numpy; the
+      DuckDB oracle recomputes the same family in SQL);
     * distinct shingle set (np.unique);
     * 128-perm MinHash + 64-bit SimHash over the distinct set;
     * anchor hashes for the exact-substring index: anchor_k-byte windows
-      whose hash % m == 0 (see operators/suffix_array.anchor_candidate_pairs
-      for the selectivity math).
-
-    Differentially tested against the pure-Python twins
-    (oracle.poly twins / functions.shingles.poly_shingles31_py).
+      whose hash % m == 0 (winnowing-style; DedupConfig.anchor_width and
+      anchor_modulus give the selectivity math). A shared substring of
+      min_len bytes holds ~4 anchors in expectation;
+      operators/suffix_array.pairs_from_anchor_rows turns shared anchors
+      into candidate pairs.
     """
     from genome_deduplication_spark.functions.shingles import (
         poly_window_hashes_batched,
@@ -133,7 +136,6 @@ def make_doc_signature_udf(cfg: DedupConfig):
     a_list, b_list = cfg.minhash_coefficients()
     a = np.array(a_list, dtype=np.int64)
     b = np.array(b_list, dtype=np.int64)
-    p = np.int64(MERSENNE31)
     num_perm = cfg.num_perm
     bits = cfg.simhash_bits
     k = cfg.shingle_k
@@ -204,59 +206,3 @@ def make_doc_signature_udf(cfg: DedupConfig):
             )
 
     return doc_signature_udf
-
-
-def make_signature_udf(cfg: DedupConfig):
-    """array<long> shingles -> struct(minhash array<long>, simhash long)."""
-    a_list, b_list = cfg.minhash_coefficients()
-    a = np.array(a_list, dtype=np.int64)
-    b = np.array(b_list, dtype=np.int64)
-    p = np.int64(MERSENNE31)
-    num_perm = cfg.num_perm
-    bits = cfg.simhash_bits
-
-    schema = T.StructType(
-        [
-            T.StructField("minhash", T.ArrayType(T.IntegerType())),
-            T.StructField("simhash", T.LongType()),
-        ]
-    )
-
-    @F.pandas_udf(schema)
-    def signature_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for series in it:
-            vals = series.to_numpy()
-            lengths = np.array(
-                [0 if s is None else len(s) for s in vals], dtype=np.int64
-            )
-            n_rows = len(vals)
-            mh_out: list = [None] * n_rows
-            sh_out = np.zeros(n_rows, dtype=np.int64)
-            nonempty = np.flatnonzero(lengths > 0)
-            if len(nonempty):
-                flat = np.concatenate([np.asarray(vals[i], dtype=np.int64)
-                                       for i in nonempty]).astype(np.uint64)
-                ne_lengths = lengths[nonempty]
-                starts = np.concatenate(([0], np.cumsum(ne_lengths)[:-1]))
-                sigs, sim = minhash_simhash_blocked(
-                    flat, starts, ne_lengths, a, b, num_perm, bits
-                )
-                for k, i in enumerate(nonempty):
-                    mh_out[i] = sigs[k]  # numpy array: no python-int boxing
-                sh_out[nonempty] = sim
-            yield pd.DataFrame(
-                {
-                    "minhash": mh_out,
-                    # object dtype: None + int64 must NOT become float64
-                    # (2**63-scale values silently lose low bits)
-                    "simhash": pd.Series(
-                        [
-                            None if lengths[i] == 0 else int(sh_out[i])
-                            for i in range(n_rows)
-                        ],
-                        dtype="object",
-                    ),
-                }
-            )
-
-    return signature_udf

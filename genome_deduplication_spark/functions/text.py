@@ -7,9 +7,9 @@ every downstream shingle/signature stage consumes. The per-row invariant of
 BASELINE.json:input_hint (byte-identical extracted text per url) holds
 because the transform is pure string algebra — no locale, no rand.
 
-Each Spark expression has a DuckDB-SQL twin (``*_duckdb_sql``) so the
-driver's oracle recomputes the identical value. DuckDB's ``regexp_replace``
-is first-match-only by default, hence the explicit ``'g'`` flag there.
+The DuckDB oracle recomputes the identical value in SQL
+(``__spark_entry__._NORM_DUCK``; DuckDB's ``regexp_replace`` is
+first-match-only by default, hence the explicit ``'g'`` flag there).
 """
 
 from __future__ import annotations
@@ -18,9 +18,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # --- normalization (P1) ----------------------------------------------------
-
-NORMALIZE_SPARK_SQL = "lower(trim(regexp_replace({c}, '\\\\s+', ' ')))"
-NORMALIZE_DUCKDB_SQL = "lower(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
 
 
 def normalize_text(col: Column) -> Column:
@@ -51,53 +48,6 @@ def extract_text_from_html(html: Column) -> Column:
 
 
 EXTRACTOR_VERSION = "regex-v1"
-
-# --- token counting --------------------------------------------------------
-
-
-def token_count(col: Column) -> Column:
-    """Whitespace token count of normalized text (0 for empty)."""
-    norm = normalize_text(col)
-    return F.when(F.length(norm) == 0, F.lit(0)).otherwise(
-        F.size(F.split(norm, " "))
-    )
-
-
-# BPE-ish subword proxy: count maximal runs of word chars + single non-space
-# non-word chars (a cheap, deterministic token estimate).
-def bpe_ish_token_count(col: Column) -> Column:
-    arr = F.regexp_extract_all(col, F.lit(r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"), 0)
-    return F.size(arr)
-
-
-# --- quality scoring -------------------------------------------------------
-
-STOPWORDS = (
-    "the a an and or of to in is are was were be been for on with as at by "
-    "it this that from"
-).split()
-
-
-def quality_features(col: Column) -> dict[str, Column]:
-    """Length / punctuation / stopword-ratio features for quality filtering."""
-    norm = normalize_text(col)
-    n_chars = F.length(norm)
-    toks = F.when(F.length(norm) == 0, F.array()).otherwise(F.split(norm, " "))
-    n_tokens = F.size(toks)
-    n_punct = n_chars - F.length(F.regexp_replace(norm, r"[^\w\s]", ""))
-    stop_arr = F.array(*[F.lit(w) for w in STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
-    return {
-        "n_chars": n_chars,
-        "n_tokens": n_tokens,
-        "punct_ratio": F.when(n_chars > 0, n_punct / n_chars).otherwise(F.lit(0.0)),
-        "stopword_ratio": F.when(n_tokens > 0, n_stop / n_tokens).otherwise(
-            F.lit(0.0)
-        ),
-        "mean_token_len": F.when(n_tokens > 0, (n_chars - (n_tokens - 1)) / n_tokens)
-        .otherwise(F.lit(0.0)),
-    }
-
 
 # --- language-ID heuristic --------------------------------------------------
 

@@ -61,9 +61,6 @@ from .verify import verify_pairs
 
 __all__ = ["dedup_increment"]
 
-_SIG_COLS = ["url", "content_hash", "minhash", "simhash"]
-
-
 def _manifest_path(state_dir: str) -> str:
     return os.path.join(state_dir, "manifest.json")
 

@@ -31,9 +31,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from genome_deduplication_spark.config import DedupConfig
+from genome_deduplication_spark.functions.hashing import (
+    compact_key,
+    key_pairs_to_ids,
+)
 
 
 def band_buckets(signatures: DataFrame, cfg: DedupConfig,
@@ -92,34 +95,19 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
     aggregate is eagerly localCheckpointed at candidate_pairs() call time
     (a Spark job runs here — lazy marks are silently not persisted under
     AQE, see PLANS.md round 4), so both the pairs plan and the stats job
-    read the persisted counts instead of re-scanning the signatures (the
-    truncation_stats full-pass path).
+    read the persisted counts instead of re-scanning the signatures.
     """
-    # Compact-key hot path: every row of the band explode (x cfg.bands row
-    # multiplication), the bucket window sort, the capped member arrays and
-    # the cross-band distinct carry the document id. For string ids (urls,
-    # ~40-80B) that id dominates the shuffled bytes — and this VM (like any
-    # saturated host) pays for shuffle/sort bytes with a hard aggregate
-    # memory-bandwidth cap (BENCH.md round 5: ~13-22 GB/s TOTAL regardless
-    # of worker count, so per-task bandwidth falls ~3x from 2 to 8 tasks).
-    # So the machinery below runs on hash128(id) BINARY(16) keys (collision
-    # odds ~1e-12 at 10^12 docs, functions/hashing.py) and the final SMALL
-    # pair set joins back to real ids. Non-string ids (already compact)
-    # pass through unchanged.
-    compact = isinstance(signatures.schema[id_col].dataType, T.StringType)
-    if compact:
-        from genome_deduplication_spark.functions.hashing import hash128
-
-        key_col = "_lsh_key"
-        base = signatures.select(
-            hash128(F.col(id_col)).alias(key_col), F.col(sig_col)
-        )
-        idmap = signatures.select(
-            hash128(F.col(id_col)).alias(key_col), F.col(id_col)
-        )
+    # Compact-key hot path (functions/hashing.compact_key): the machinery
+    # below runs on hash128(id) BINARY(16) keys for string ids and the
+    # final small pair set joins back to real ids. No .distinct() on the
+    # idmap: one signature row per id is the precondition above.
+    key = compact_key(signatures, id_col)
+    if key is None:
+        key_col, base = id_col, signatures
     else:
-        key_col = id_col
-        base = signatures
+        key_col = "_lsh_key"
+        base = signatures.select(key.alias(key_col), F.col(sig_col))
+        idmap = signatures.select(key.alias(key_col), F.col(id_col))
 
     buckets = band_buckets(base, cfg, key_col, sig_col)
     if restrict_to is not None:
@@ -185,32 +173,21 @@ def candidate_pairs(signatures: DataFrame, cfg: DedupConfig,
         .select(F.col("p.id_a"), F.col("p.id_b"))
         .distinct()  # cross-band dedup on 16B keys, before any join-back
     )
-    if compact:
-        # translate the (small) pair set back to real ids. The map side is
-        # one row per input doc — broadcastable at bench scale, a plain
-        # shuffle join of pair-cardinality rows at cluster scale. Pair
-        # orientation is re-normalized in id space: the star/cap election
-        # above ordered by key, which is not the id order.
-        map_a = idmap.select(
-            F.col(key_col).alias("id_a"), F.col(id_col).alias("_ia")
-        )
-        map_b = idmap.select(
-            F.col(key_col).alias("id_b"), F.col(id_col).alias("_ib")
-        )
-        pairs = (
-            pairs.join(map_a, "id_a")
-            .join(map_b, "id_b")
-            .select(
-                F.least("_ia", "_ib").alias("id_a"),
-                F.greatest("_ia", "_ib").alias("id_b"),
-            )
-        )
+    if key is not None:
+        pairs = key_pairs_to_ids(pairs, idmap, key_col, id_col)
     return (pairs, stats) if with_stats else pairs
 
 
 def _truncation_agg(counts: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """One-row truncation accounting over a (band_id, band_hash, _n) counts
-    table: see truncation_stats."""
+    """Lineage metric: how many buckets the candidate stage truncated.
+
+    One row over a (band_id, band_hash, _n) counts table: (buckets_total,
+    buckets_dropped, buckets_capped, docs_in_dropped) — dropped = bucket
+    size > DROP_CAP (no pairs emitted at all), capped = max_bucket_size <
+    size <= DROP_CAP (star restricted to the smallest max_bucket_size
+    members). The reference never silently drops data (every region lands
+    in an accounting file, code/dedup2.py:480-493); this is the Spark
+    analogue: the pipeline records these counts in metrics.jsonl."""
     return counts.agg(
         F.count(F.lit(1)).alias("buckets_total"),
         F.sum(
@@ -227,24 +204,6 @@ def _truncation_agg(counts: DataFrame, cfg: DedupConfig) -> DataFrame:
             F.when(F.col("_n") > DROP_CAP, F.col("_n")).otherwise(0)
         ).alias("docs_in_dropped"),
     )
-
-
-def truncation_stats(signatures: DataFrame, cfg: DedupConfig,
-                     id_col: str = "url", sig_col: str = "minhash") -> DataFrame:
-    """Lineage metric: how many buckets the candidate stage truncated.
-
-    One row: (buckets_total, buckets_dropped, buckets_capped, docs_in_dropped)
-    — dropped = bucket size > DROP_CAP (no pairs emitted at all), capped =
-    max_bucket_size < size <= DROP_CAP (star restricted to the smallest
-    max_bucket_size members). The reference never silently drops data (every
-    region lands in an accounting file, code/dedup2.py:480-493); this is the
-    Spark analogue: the pipeline records these counts in metrics.jsonl."""
-    counts = (
-        band_buckets(signatures, cfg, id_col, sig_col)
-        .groupBy("band_id", "band_hash")
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    return _truncation_agg(counts, cfg)
 
 
 def bucket_stats(signatures: DataFrame, cfg: DedupConfig,

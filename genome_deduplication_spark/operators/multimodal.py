@@ -564,12 +564,3 @@ def media_exact_dup_clusters(media: DataFrame) -> DataFrame:
         F.min("media_id").alias("cluster_id"), F.count(F.lit(1)).alias("cluster_size")
     )
     return keyed.join(canon, "payload_hash")
-
-
-def frame_sample_positions(duration_ms: F.Column, every_ms: int) -> F.Column:
-    """Deterministic frame-sampling positions for video payloads (JVM-side):
-    [0, every_ms, 2*every_ms, ...) < duration_ms."""
-    return F.when(
-        duration_ms > 0,
-        F.sequence(F.lit(0).cast("long"), duration_ms - 1, F.lit(every_ms).cast("long")),
-    ).otherwise(F.array().cast("array<long>"))

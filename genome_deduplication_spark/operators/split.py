@@ -1,7 +1,9 @@
-"""Dataset-build tail: seeded shuffle, train/dev split, size-matched sampling.
+"""Dataset-build tail: seeded shuffle key, train/dev split, size-matched
+sampling.
 
 Reference semantics (SURVEY.md §2.5):
-  R1 seeded permutation shuffle        (code/shuffle.py:18-25)
+  R1 seeded permutation shuffle        (code/shuffle.py:18-25) — the
+     keyed_uniform order column (plans/dataset_build.shuffle_key)
   R2 train/dev split, dev = pct capped (code/partition_samples.sh:16-35)
   R3 control-line sampling w/o replacement
                                        (code/get_samples_based_on_dedup.py:27-41)
@@ -26,11 +28,6 @@ def keyed_uniform(seed: int, *cols) -> F.Column:
     return (
         F.pmod(F.xxhash64(F.lit(seed), *cols), F.lit(_U_DENOM)) / F.lit(float(_U_DENOM))
     )
-
-
-def seeded_shuffle(df: DataFrame, seed: int, *key_cols: str) -> DataFrame:
-    """Deterministic permutation: order by keyed hash (R1)."""
-    return df.orderBy(keyed_uniform(seed, *[F.col(c) for c in key_cols]), *key_cols)
 
 
 _SPLIT_BUCKETS = 8192

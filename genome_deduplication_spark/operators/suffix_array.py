@@ -13,7 +13,9 @@ two docs and scans adjacent suffix pairs from different docs for the
 longest cross-document LCP. The pair rows are small (ids plus text) but
 each costs a numpy suffix-array build, so the spread is a fixed-count
 repartition that adaptive execution may not coalesce: every core runs the
-kernel instead of one merged task.
+kernel instead of one merged task. The candidate pairs come from
+:func:`pairs_from_anchor_rows` over the anchor hashes the signature kernel
+emits (functions.signatures.make_doc_signature_udf).
 
 The same kernel, run on a single document against itself, finds internal
 repeats — the reference's internal-vs-global repeat discrimination
@@ -27,6 +29,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from genome_deduplication_spark.functions.hashing import (
+    compact_key,
+    key_pairs_to_ids,
+)
 
 
 # symbols packed into the first sort key: 7 x 9 bits fit a non-negative
@@ -172,58 +179,6 @@ def longest_self_repeat_len(a: str) -> int:
     return _max_lcp(data, ranks, sa[1:], sa[:-1])
 
 
-def anchor_candidate_pairs(
-    docs: DataFrame,
-    min_len: int,
-    shingle_k: int,
-    max_bucket_size: int = 200,
-    min_shared_anchors: int = 2,
-    anchor_k: int | None = None,
-    id_col: str = "url",
-    text_col: str = "text",
-) -> DataFrame:
-    """Candidate pairs for the exact-substring pass via anchor shingles.
-
-    The reference catches shared substrings because *every* k-mer enters one
-    global set (code/dedup2.py:142) — any overlap of length >= k collides.
-    At web scale indexing every shingle is the full inverted index; instead
-    we index only *anchor* shingles (hash % m == 0, winnowing-style
-    fingerprinting). A shared substring of length >= min_len contains
-    (min_len - anchor_k + 1) consecutive anchor-width shingles, so with
-    m = window / 4 the expected number of shared anchors is ~4 and the miss
-    probability (1 - 1/m)^window ~ e^-4 < 2%. Deterministic — no rand().
-
-    ``anchor_k`` is intentionally much wider than the similarity shingle
-    (default ~min_len/2, capped at 48): a 9-char shingle is not
-    discriminative on low-entropy text (common phrases collide corpus-wide,
-    exploding the candidate set), while a 48-char exact match between
-    non-duplicated documents is vanishingly rare. This mirrors the
-    reference's choice of k=32 over a 4-letter alphabet — the anchor must
-    carry enough entropy to make chance collisions negligible
-    (code/dedup2.py:576, k default discussion).
-    """
-    from genome_deduplication_spark.functions.shingles import char_shingles64
-
-    if anchor_k is None:
-        anchor_k = max(shingle_k, min(48, min_len // 2))
-    window = max(min_len - anchor_k + 1, 1)
-    m = max(window // 4, 1)
-    # xxhash64 (not the portable md5 hash): anchors never need cross-engine
-    # reproduction, and xxhash is ~an order of magnitude cheaper per window
-    anchors = docs.select(
-        F.col(id_col),
-        F.explode(
-            F.filter(
-                char_shingles64(F.col(text_col), anchor_k),
-                lambda h: F.pmod(h, F.lit(m)) == 0,
-            )
-        ).alias("anchor"),
-    )
-    return pairs_from_anchor_rows(
-        anchors, max_bucket_size, min_shared_anchors, id_col=id_col
-    )
-
-
 def pairs_from_anchor_rows(
     anchors: DataFrame,
     max_bucket_size: int,
@@ -251,22 +206,16 @@ def pairs_from_anchor_rows(
     # member arrays, and pairs emitted by array transforms (the lsh.py
     # clique pattern — cap 50 bounds a row to 1225 pair structs). The
     # small surviving pair set joins back to real ids at the end.
-    compact = isinstance(anchors.schema[id_col].dataType, T.StringType)
-    if compact:
-        from genome_deduplication_spark.functions.hashing import hash128
-
-        key_col = "_sa_key"
-        keyed = anchors.select(
-            "anchor", hash128(F.col(id_col)).alias(key_col)
-        )
-        # distinct (group-by-only => buffer-free HashAggregate; md5
-        # collisions make key<->id effectively bijective)
-        idmap = anchors.select(
-            hash128(F.col(id_col)).alias(key_col), F.col(id_col)
-        ).distinct()
+    key = compact_key(anchors, id_col)
+    if key is None:
+        key_col, keyed = id_col, anchors
     else:
-        key_col = id_col
-        keyed = anchors
+        key_col = "_sa_key"
+        keyed = anchors.select("anchor", key.alias(key_col))
+        # distinct: an id has many anchor rows (group-by-only =>
+        # buffer-free HashAggregate; md5 collisions make key<->id
+        # effectively bijective)
+        idmap = anchors.select(key.alias(key_col), F.col(id_col)).distinct()
 
     # df >= 2: an anchor seen in one document cannot witness a shared
     # substring — pruning singletons here (the overwhelming majority of
@@ -308,21 +257,8 @@ def pairs_from_anchor_rows(
         .where(F.col("n_shared_anchors") >= min_shared_anchors)
         .select("id_a", "id_b")
     )
-    if compact:
-        map_a = idmap.select(
-            F.col(key_col).alias("id_a"), F.col(id_col).alias("_ia")
-        )
-        map_b = idmap.select(
-            F.col(key_col).alias("id_b"), F.col(id_col).alias("_ib")
-        )
-        pairs = (
-            pairs.join(map_a, "id_a")
-            .join(map_b, "id_b")
-            .select(
-                F.least("_ia", "_ib").alias("id_a"),
-                F.greatest("_ia", "_ib").alias("id_b"),
-            )
-        )
+    if key is not None:
+        pairs = key_pairs_to_ids(pairs, idmap, key_col, id_col)
     return pairs
 
 
@@ -345,10 +281,11 @@ def exact_substring_pairs(
               .withColumnRenamed(text_col, "text_b"), "id_b")
     )
 
+    # ids keep their input type: string urls, int64 doc ids
     schema = T.StructType(
         [
-            T.StructField("id_a", T.StringType()),
-            T.StructField("id_b", T.StringType()),
+            T.StructField("id_a", pairs.schema["id_a"].dataType),
+            T.StructField("id_b", pairs.schema["id_b"].dataType),
             T.StructField("lcs_len", T.LongType()),
         ]
     )

@@ -1,1 +1,1 @@
-"""Sources/sinks: pages input, stage checkpoints, run manifests."""
+"""Sources/sinks: pages input, stage checkpoints, training-shard export."""

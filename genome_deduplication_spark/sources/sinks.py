@@ -1,9 +1,11 @@
-"""Output sinks — the BED-dump analogue (reference code/dedup2.py:280-310
-writes 4 region files per input; here: clusters / pairs / spans tables).
+"""Output sink: the training-shard exporter.
 
-Parquet in this sandbox; `writeTo(...).append()` against an Iceberg catalog
-in production (same call sites, different format string). Writers partition
-by a stable bucket of the key so downstream consumers get co-located reads.
+The pipeline's own tables (clusters / pairs / spans, README "Output model")
+are returned as DataFrames and, in a checkpointed run, written as stage
+tables with a completion manifest (sources/checkpoint.py). The one file
+export on top of them is :func:`write_training_shards`: deterministic,
+size-targeted shards plus a read-back manifest — the analogue of the
+reference's per-input region-file dump (code/dedup2.py:280-310).
 """
 
 from __future__ import annotations
@@ -13,37 +15,6 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _write(df: DataFrame, path: str, partition_cols: list[str] | None = None,
-           mode: str = "overwrite") -> None:
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(path)
-
-
-def write_clusters(clusters: DataFrame, out_dir: str) -> None:
-    """clusters(url, cluster_id, cluster_size)."""
-    _write(clusters, os.path.join(out_dir, "clusters"))
-
-
-def write_pairs(pairs: DataFrame, out_dir: str) -> None:
-    """pairs(id_a, id_b, [scores...])."""
-    _write(pairs, os.path.join(out_dir, "pairs"))
-
-
-def write_spans(spans: DataFrame, out_dir: str, kind: str) -> None:
-    """spans(url, start, end) tagged with their kind
-    (samples/masks/ignored/ambiguous analogue)."""
-    _write(spans.withColumn("kind", F.lit(kind)), os.path.join(out_dir, f"spans_{kind}"))
-
-
-def write_run_manifest(out_dir: str, config_json: str, metrics: list[dict]) -> None:
-    """Reproducibility manifest (reference config.json, code/dedup2.py:513)."""
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "run_manifest.json"), "w") as f:
-        json.dump({"config": json.loads(config_json), "metrics": metrics}, f, indent=2)
 
 
 def write_training_shards(

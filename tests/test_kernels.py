@@ -7,37 +7,11 @@ import random
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig, lsh_threshold_curve
-from genome_deduplication_spark.functions.minhash import (
-    make_minhash_udf,
-    minhash_py,
-)
-from genome_deduplication_spark.functions.shingles import char_shingles31
-from genome_deduplication_spark.functions.simhash import make_simhash_udf, simhash_py
-from genome_deduplication_spark.oracle import normalize_py, shingles31_py
+from genome_deduplication_spark.functions.minhash import minhash_py
+from genome_deduplication_spark.functions.simhash import simhash_py
+from genome_deduplication_spark.oracle import normalize_py
 
 CFG = DedupConfig()
-
-
-def test_shingles_spark_matches_python(spark):
-    texts = ["hello world this is a test", "aaaaaaaaaaaa", "short", ""]
-    df = spark.createDataFrame([(t,) for t in texts], "text string")
-    rows = df.select(char_shingles31(F.col("text"), CFG.shingle_k).alias("s")).collect()
-    for t, r in zip(texts, rows):
-        assert set(r["s"]) == shingles31_py(t, CFG.shingle_k), t
-
-
-def test_minhash_spark_matches_python(spark):
-    rng = random.Random(7)
-    sets = [sorted(rng.sample(range(1, 2**31 - 1), rng.randint(5, 200))) for _ in range(10)]
-    sets.append([])  # empty -> null signature
-    df = spark.createDataFrame([(s,) for s in sets], "shingles array<bigint>")
-    udf = make_minhash_udf(CFG)
-    rows = df.select(udf("shingles").alias("sig")).collect()
-    for s, r in zip(sets, rows):
-        if not s:
-            assert r["sig"] is None
-        else:
-            assert r["sig"] == minhash_py(s, CFG)
 
 
 def test_minhash_estimates_jaccard(spark):
@@ -52,39 +26,6 @@ def test_minhash_estimates_jaccard(spark):
     sig_b = minhash_py(sorted(other), CFG)
     est = sum(x == y for x, y in zip(sig_a, sig_b)) / CFG.num_perm
     assert abs(est - true_j) < 0.12  # ~3 sigma at 128 perms
-
-
-def test_simhash_spark_matches_python(spark):
-    rng = random.Random(13)
-    sets = [sorted(rng.sample(range(1, 2**31 - 1), rng.randint(5, 100))) for _ in range(8)]
-    df = spark.createDataFrame([(s,) for s in sets], "shingles array<bigint>")
-    udf = make_simhash_udf(64)
-    rows = df.select(udf("shingles").alias("sig")).collect()
-    for s, r in zip(sets, rows):
-        assert r["sig"] == simhash_py(s, 64)
-
-
-def test_fused_signature_udf_matches_separate_kernels(spark):
-    import random as _r
-
-    from pyspark.sql import functions as F2
-
-    from genome_deduplication_spark.functions.signatures import make_signature_udf
-
-    rng = _r.Random(21)
-    sets = [sorted(rng.sample(range(1, 2**31 - 1), rng.randint(5, 300))) for _ in range(12)]
-    sets.append([])
-    df = spark.createDataFrame([(s,) for s in sets], "shingles array<bigint>")
-    fused = make_signature_udf(CFG)
-    rows = df.select(fused("shingles").alias("sig")).select(
-        F2.col("sig.minhash").alias("mh"), F2.col("sig.simhash").alias("sh")
-    ).collect()
-    for s, r in zip(sets, rows):
-        if not s:
-            assert r["mh"] is None and r["sh"] is None
-        else:
-            assert r["mh"] == minhash_py(s, CFG)
-            assert r["sh"] == simhash_py(s, 64)
 
 
 def test_doc_signature_udf_matches_python_twins(spark):

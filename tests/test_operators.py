@@ -22,6 +22,14 @@ from genome_deduplication_spark.operators.suffix_array import (
 )
 
 
+def _final_plan(df) -> str:
+    """Run ``df`` and return its executed plan as adaptive execution left
+    it (the final plan, without the initial one AQE also prints)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
 def _condense_oracle(positions: list[int], widen: int) -> list[tuple[int, int]]:
     """Sequential twin of the reference's condense_masked_regions
     (semantics from code/dedup2.py:235-246 — reimplemented, not copied)."""
@@ -136,13 +144,11 @@ def test_candidate_pairs_star_and_clique_policy(spark):
 def test_candidate_pairs_cap_and_truncation_stats(spark):
     """Buckets above max_bucket_size keep only the smallest members (the
     rank-filter happens BEFORE collect_list — no reducer row ever holds
-    more than max_bucket_size ids), and truncation_stats accounts for
-    every capped/dropped bucket (nothing is dropped silently)."""
+    more than max_bucket_size ids), and the with_stats accounting the
+    pipeline records covers every capped/dropped bucket (nothing is
+    dropped silently)."""
     from genome_deduplication_spark.config import DedupConfig
-    from genome_deduplication_spark.operators.lsh import (
-        candidate_pairs,
-        truncation_stats,
-    )
+    from genome_deduplication_spark.operators.lsh import candidate_pairs
 
     cfg = DedupConfig(max_bucket_size=5)
     docs = [(f"d{i:03d}", [3] * cfg.num_perm) for i in range(20)]
@@ -156,7 +162,9 @@ def test_candidate_pairs_cap_and_truncation_stats(spark):
         for j in range(i + 1, 5)  # 5 <= CLIQUE_BUDGET -> full clique
     }
     assert got == want
-    stats = truncation_stats(df, cfg).collect()[0]
+    pairs, stats = candidate_pairs(df, cfg, with_stats=True)
+    assert {(r["id_a"], r["id_b"]) for r in pairs.collect()} == want
+    stats = stats.collect()[0]
     assert stats["buckets_total"] == cfg.bands
     assert stats["buckets_capped"] == cfg.bands  # every band bucket size 20
     assert stats["buckets_dropped"] == 0
@@ -266,6 +274,21 @@ def test_exact_substring_pairs_spreads_kernel_over_shuffle_partitions(spark):
     ), plan
     assert out.rdd.getNumPartitions() == n
 
+    # bigint ids (the tier report's doc ids) keep their type
+    int_pages = spark.createDataFrame(
+        [(int(r["url"][1:]), r["text"]) for r in pages.collect()],
+        "url bigint, text string",
+    )
+    int_pairs = spark.createDataFrame(
+        [(int(a[1:]), int(b[1:])) for a, b, _ in want],
+        "id_a bigint, id_b bigint",
+    )
+    out = exact_substring_pairs(int_pairs, int_pages, min_len=len(shared))
+    assert out.schema["id_a"].dataType.typeName() == "long"
+    assert {
+        (r["id_a"], r["id_b"], r["is_substring_dup"]) for r in out.collect()
+    } == {(int(a[1:]), int(b[1:]), d) for a, b, d in want}
+
 
 def test_train_dev_split_deterministic(spark):
     df = spark.createDataFrame([(f"u{i}",) for i in range(100)], "url string")
@@ -282,7 +305,7 @@ def test_train_dev_split_deterministic(spark):
     assert d1 != d3
 
 
-def test_train_dev_split_matches_seeded_shuffle_head(spark):
+def test_train_dev_split_dev_is_keyed_uniform_head(spark):
     """The bucket-histogram selection is exactly the old global-rank
     semantics: dev = n_dev smallest rows by (keyed_uniform, key)."""
     from genome_deduplication_spark.operators.split import keyed_uniform
@@ -495,6 +518,50 @@ def test_stratified_sample_prunes_before_window(spark):
     import re
 
     assert re.search(r"Window \[(.|\n)*Filter .*<= (map\(keys:|_thr#)", plan), plan
+    # these bounded string strata take the literal-map path: no threshold
+    # frame is broadcast, before or after adaptive re-planning
+    for p in (plan, _final_plan(out)):
+        assert "BroadcastExchange" not in p, p
+
+
+def test_verify_pairs_plan_is_shuffled_hash_joins(spark):
+    """Plan guard: both signature lookups of verify_pairs are shuffled-hash
+    joins — a broadcast collects and builds the signature table once per
+    pair side, a sort-merge join pays two full sorts."""
+    from genome_deduplication_spark.config import DedupConfig
+    from genome_deduplication_spark.operators.verify import verify_pairs
+
+    cfg = DedupConfig()
+    sigs = spark.createDataFrame(
+        [(f"d{i}", [i % 3] * cfg.num_perm, i) for i in range(12)],
+        "url string, minhash array<int>, simhash bigint",
+    )
+    pairs = spark.createDataFrame(
+        [("d1", "d2"), ("d3", "d5")], "id_a string, id_b string"
+    )
+    plan = _final_plan(verify_pairs(pairs, sigs, cfg))
+    assert plan.count("ShuffledHashJoin") == 2, plan
+    assert "BroadcastHashJoin" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+
+
+def test_masked_word_spans_island_window_reuses_read_spread(spark, sf_dir):
+    """Plan guard: the island window (and the first-occurrence window and
+    span aggregate below and above it) reuse _read's doc_id spread of the
+    small testdata file — exactly one Exchange under the island window."""
+    import os
+
+    import pytest
+
+    if not os.path.exists(f"{sf_dir}/documents.parquet"):
+        pytest.skip("testdata not present")
+    import __spark_entry__ as entrymod
+
+    plan = _final_plan(entrymod.q_masked_word_spans(spark, sf_dir))
+    lines = plan.splitlines()
+    island = next(i for i, ln in enumerate(lines) if "Window [sum(flag" in ln)
+    exchanges = [ln for ln in lines[island:] if "Exchange " in ln]
+    assert len(exchanges) == 1, plan
 
 
 def test_get_json_object_rollup_handles_malformed_and_missing(spark):
