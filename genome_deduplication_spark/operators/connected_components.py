@@ -11,12 +11,12 @@ joins; converges in O(log^2 n) rounds on adversarial chains, ~3-5 rounds on
 real dup clusters. Each round is two shuffles; lineage is cut with
 localCheckpoint every round so the plan does not grow (SURVEY.md §4 item 2).
 
-IDs are mapped to a 128-bit BINARY(16) key (unhex'd md5) for cheap
-fixed-width shuffles without birthday collisions at 10^12 ids; the final
-cluster id is the *minimum original key* (warc_ts, url struct ordering is
-applied by the caller through min-election, here minimum hashed id) —
-callers re-attach string ids by join. All operators below work on any
-orderable node type (int64 or struct).
+Nodes are the ids themselves — int64 or string, any orderable type. The
+caller passes the node universe with the edges and gets back one
+``(node, component)`` row per universe node, where ``component`` is the
+smallest node id in the component and a node without edges labels itself.
+That label already is the ``min(id)`` representative callers want, so no
+id -> key map, join-back or separate election sits around the loop.
 """
 
 from __future__ import annotations
@@ -61,12 +61,17 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 20
-) -> DataFrame:
-    """(src, dst) int64 edge list -> (node, component) with component =
-    min node id of the component. Nodes appearing only as singletons are the
-    caller's concern (left join + coalesce to self)."""
+# Round cap of the large-star/small-star loop; dup graphs converge in a
+# handful of rounds, adversarial chains in O(log^2 n).
+MAX_ROUNDS = 20
+
+
+def connected_components(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """(src, dst) edge list + ``node`` universe -> one (node, component) row
+    per universe node, component = min node id of its component; a node
+    without edges labels itself. Edge endpoints outside the universe still
+    connect the graph but get no row. A NULL node keeps its row, labelled
+    NULL."""
     cur = (
         edges.select(
             F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
@@ -78,8 +83,6 @@ def connected_components(
         # one cheap job instead of two exceptAll passes: (count, hash-sum)
         # pmod keeps each summand < 1e9 so the sum stays in int64 under ANSI
         # mode up to ~9e9 edges
-        # xxhash64 hashes struct columns natively, so this works for both
-        # int64 and struct<hi,lo> node ids
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(
@@ -114,48 +117,31 @@ def connected_components(
     #    needing a second full round to notice (fp(round1) == fp(cur0)).
     cur = cur.localCheckpoint(eager=True)
     prev_fp = _fingerprint(cur)
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         fp = _fingerprint(cur)
         if fp == prev_fp:
             break
         prev_fp = fp
-    # after convergence every edge is (node -> component min)
-    comp = cur.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    # ensure component roots map to themselves
-    roots = comp.select(F.col("component").alias("node"),
-                        F.col("component").alias("component")).distinct()
-    return comp.union(roots).groupBy("node").agg(F.min("component").alias("component"))
+    # after convergence every edge is (node -> component min); component
+    # roots have no edge of their own and label themselves via coalesce
+    comp = cur.groupBy(F.col("src").alias("node")).agg(
+        F.min("dst").alias("component")
+    )
+    return nodes.join(comp, "node", "left").select(
+        "node", F.coalesce("component", "node").alias("component")
+    )
 
 
 def components_for_string_ids(edges: DataFrame, all_ids: DataFrame,
                               id_col: str = "url") -> DataFrame:
-    """String-id edge list (id_a, id_b) + universe of ids -> (id, cluster_key)
-    where cluster_key is the lexicographically/structurally minimal member id
-    ... represented by the min xxhash-mapped node, then re-joined to strings.
-
-    To make the cluster id deterministic and meaningful we map back to the
-    minimum *string* id within each component (min over the original key).
-    """
-    ids = all_ids.select(F.col(id_col).alias("id")).distinct()
-    # 128-bit node key: a 64-bit map expects ~tens of thousands of birthday
-    # collisions at 10^12 ids — each one silently merging unrelated
-    # clusters. Representation matters: BINARY(16) (unhex'd md5) keeps the
-    # fast hash-aggregate/codegen path; struct<hi,lo> keys fell off it
-    # (measured ~18% CC slowdown) and hex strings doubled the width.
-    node_map = ids.select("id", F.unhex(F.md5("id")).alias("node"))
-    e = (
-        edges.join(node_map.withColumnRenamed("id", "id_a")
-                   .withColumnRenamed("node", "src"), "id_a")
-        .join(node_map.withColumnRenamed("id", "id_b")
-              .withColumnRenamed("node", "dst"), "id_b")
-        .select("src", "dst")
+    """(id_a, id_b) edge list + universe of ids -> one (id_col, cluster_key)
+    row per distinct id, cluster_key = the minimum id of its component.
+    A NULL id keeps its row with a NULL cluster_key."""
+    comp = connected_components(
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        all_ids.select(F.col(id_col).alias("node")).distinct(),
     )
-    comp = connected_components(e)
-    labeled = node_map.join(comp, "node", "left").select(
-        "id", F.coalesce("component", "node").alias("component")
-    )
-    canon = labeled.groupBy("component").agg(F.min("id").alias("cluster_key"))
-    return labeled.join(canon, "component").select(
-        F.col("id").alias(id_col), "cluster_key"
+    return comp.select(
+        F.col("node").alias(id_col), F.col("component").alias("cluster_key")
     )

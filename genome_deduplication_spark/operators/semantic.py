@@ -196,8 +196,8 @@ def semantic_dedup(
 
     Stages: k-means fit (bounded driver state) -> cell assignment (Arrow
     matmul, no shuffle) -> rank-cap per cell -> within-cell pair join with
-    the exact cosine predicate JVM-side -> connected components -> join
-    rep back to every input id.
+    the exact cosine predicate JVM-side -> connected components, which
+    label every input id.
     """
     cents = kmeans_fit(vectors, k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
     assigned = assign_cells(vectors, cents, vec_col=vec_col).select(
@@ -209,9 +209,8 @@ def semantic_dedup(
         "_id", "_v", "cell", F.sqrt(_dot(F.col("_v"), F.col("_v"))).alias("_n")
     )
     # cap hot cells before the pair join (lsh.py DROP_CAP pattern), then
-    # materialize: the frame feeds both sides of the self-join and the
-    # final join-back — three consumers (lazy marks are not persisted
-    # under AQE; PLANS.md round 4)
+    # materialize: the frame feeds both sides of the self-join (lazy
+    # marks are not persisted under AQE; PLANS.md round 4)
     w = Window.partitionBy("cell").orderBy("_id")
     capped = (
         assigned.withColumn("_rn", F.row_number().over(w))
@@ -237,16 +236,12 @@ def semantic_dedup(
         )
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    comps = connected_components(edges)
-    # join-back needs only the id universe — read it from the input, not
-    # the assigned frame, so the assignment matmul runs exactly once
-    out = (
-        vectors.select(id_col)
-        .join(comps.withColumnRenamed("node", id_col), id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("component", F.col(id_col)).alias("rep_id"),
-        )
-        .withColumn("kept", F.col("rep_id") == F.col(id_col))
+    # the id universe comes from the input, not the assigned frame, so
+    # the assignment matmul runs exactly once
+    return connected_components(
+        edges, vectors.select(F.col(id_col).alias("node"))
+    ).select(
+        F.col("node").alias(id_col),
+        F.col("component").alias("rep_id"),
+        (F.col("node") == F.col("component")).alias("kept"),
     )
-    return out

@@ -33,7 +33,7 @@ from ..functions.text import normalize_text
 from ..functions.urls import canonicalize_url
 from .connected_components import connected_components
 from .lsh import candidate_pairs
-from .verify import dup_edges, verify_pairs
+from .verify import verify_pairs
 
 __all__ = ["tier_dedup_report"]
 
@@ -124,17 +124,9 @@ def tier_dedup_report(
     # no exact short-circuit stage is needed here
     eligible = F.length("s") >= F.lit(cfg.shingle_k)  # NULL-safe: NULL -> filtered
     sig_udf = make_doc_signature_udf(cfg)
-    # NUMERIC ids end to end (r6): the tier report's ids are int64, so
-    # the near stack runs on them directly — candidate_pairs skips its
-    # hash128 compact-key mapping + two join-backs (a bigint id IS the
-    # fixed-width shuffle key, with zero collision risk at any scale),
-    # and connected_components runs on int64 nodes, where the component
-    # label it returns (min node id) IS the numeric-min representative —
-    # eliminating the md5 node map (3 references), the min-string
-    # election (groupBy + join), AND the tier's own n_rep election
-    # (another groupBy + join) from the old components_for_string_ids
-    # path. Output values are identical: rep = min(doc_id) of the
-    # component either way.
+    # int64 ids end to end: a bigint id IS the fixed-width shuffle key, so
+    # candidate_pairs skips its hash128 compact-key mapping, and the CC
+    # label (min doc_id of the component) IS the near-tier representative
     sigs = (
         surv2.where(eligible)
         .select(
@@ -151,16 +143,12 @@ def tier_dedup_report(
         .localCheckpoint(eager=True)
     )
     pairs = candidate_pairs(sigs, cfg)
-    edges = dup_edges(verify_pairs(pairs, sigs, cfg))
-    comp = connected_components(
-        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    universe = sigs.select(F.col("url").alias("doc_id"))
-    t3 = universe.join(
-        comp, universe["doc_id"] == comp["node"], "left"
-    ).select(
-        "doc_id", F.coalesce("component", "doc_id").alias("rep")
-    )
+    t3 = connected_components(
+        verify_pairs(pairs, sigs, cfg).where("is_dup").select(
+            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
+        ),
+        sigs.select(F.col("url").alias("node")),
+    ).select(F.col("node").alias("doc_id"), F.col("component").alias("rep"))
     near_removed = t3.where(F.col("doc_id") != F.col("rep")).select(
         "doc_id", F.lit("near").alias("tier"), F.col("rep").alias("kept_by")
     )

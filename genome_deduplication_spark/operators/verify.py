@@ -85,7 +85,3 @@ def verify_pairs(
             "is_dup", F.col("is_dup") & (u >= F.lit(cfg.retain_rate))
         )
     return verdict
-
-
-def dup_edges(verified: DataFrame) -> DataFrame:
-    return verified.where("is_dup").select("id_a", "id_b")

@@ -5,15 +5,15 @@ independent implementation of the same shingle/signature config, diffed
 against the Spark pipeline's outputs
 (reference: run_memory_comparison.sh:78-89 diffs all BED outputs py<->cpp).
 
-Two oracles:
-
-* :func:`oracle_clusters_exact_jaccard` — ground truth: exact shingle-set
-  Jaccard >= threshold pairs + union-find clusters. The Spark pipeline's
-  dup-pair recall is measured against THIS (BASELINE.json: recall >= 0.99).
-* :func:`oracle_clusters_minhash` — same MinHash/LSH/verify math as the
-  Spark pipeline but sequential; used to localize any recall loss to either
-  the probabilistic scheme (oracle_minhash vs oracle_exact) or the Spark
-  implementation (spark vs oracle_minhash, which must match EXACTLY).
+* :func:`exact_jaccard_pairs` — ground truth: exact shingle-set Jaccard
+  >= threshold pairs.
+* :func:`minhash_lsh_pairs` — same MinHash/LSH/verify math as the Spark
+  pipeline but sequential, to localize a recall loss to either the
+  probabilistic scheme or the Spark implementation.
+* :func:`pair_recall` — transitive dup-pair recall of a pair set against
+  a truth set (the tests measure the pipeline against planted truth).
+* :func:`_clusters_from_edges` — sequential union-find whose root is the
+  minimum id: the twin of ``connected_components``.
 """
 
 from __future__ import annotations
@@ -102,14 +102,6 @@ def exact_jaccard_pairs(
     return out
 
 
-def oracle_clusters_exact_jaccard(
-    docs: dict[str, str], cfg: DedupConfig
-) -> dict[str, str]:
-    """url -> cluster id (min member url), exact Jaccard ground truth."""
-    edges = exact_jaccard_pairs(docs, cfg)
-    return _clusters_from_edges(sorted(docs), edges)
-
-
 def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig) -> set[tuple[str, str]]:
     """Sequential twin of the Spark MinHash/LSH/verify pair generation."""
     sigs: dict[str, list[int]] = {}
@@ -150,11 +142,6 @@ def minhash_lsh_pairs(docs: dict[str, str], cfg: DedupConfig) -> set[tuple[str, 
         if est >= cfg.jaccard_threshold and ham <= cfg.simhash_max_hamming:
             out.add((a, b))
     return out
-
-
-def oracle_clusters_minhash(docs: dict[str, str], cfg: DedupConfig) -> dict[str, str]:
-    edges = minhash_lsh_pairs(docs, cfg)
-    return _clusters_from_edges(sorted(docs), edges)
 
 
 def pair_recall(got: set[tuple[str, str]], truth: set[tuple[str, str]]) -> float:

@@ -75,15 +75,74 @@ def test_merge_intervals(spark):
     assert got == {("a", 0, 15), ("a", 20, 35), ("b", 0, 1)}
 
 
+def _random_cc_graph(seed: int) -> tuple[list[int], list[tuple[int, int]]]:
+    """Seeded graph of disjoint chains (long enough to need several
+    large-star/small-star rounds), stars, cliques and edgeless nodes, on
+    shuffled ids so no shape follows id order. Returns (universe, edges)
+    with duplicate, reversed and self-loop edges mixed in."""
+    import random
+
+    rng = random.Random(seed)
+    ids = list(range(1, 400))
+    rng.shuffle(ids)
+    pool = iter(ids)
+    universe: list[int] = []
+    edges: list[tuple[int, int]] = []
+    for _ in range(3):  # chains
+        c = [next(pool) for _ in range(rng.randint(20, 60))]
+        edges += list(zip(c, c[1:]))
+        universe += c
+    for _ in range(4):  # stars
+        hub, *leaves = [next(pool) for _ in range(rng.randint(3, 12))]
+        edges += [(hub, v) for v in leaves]
+        universe += [hub, *leaves]
+    for _ in range(3):  # cliques
+        c = [next(pool) for _ in range(rng.randint(3, 6))]
+        edges += [(a, b) for i, a in enumerate(c) for b in c[i + 1:]]
+        universe += c
+    universe += [next(pool) for _ in range(10)]  # no edge at all
+    edges += [(b, a) for a, b in rng.sample(edges, 5)] + rng.sample(edges, 5)
+    edges += [(v, v) for v in rng.sample(universe, 3)]
+    rng.shuffle(edges)
+    return universe, edges
+
+
 def test_connected_components_chain_and_clique(spark):
+    """connected_components == the sequential union-find oracle (root =
+    minimum id) on seeded graphs, on bigint ids and on string ids whose
+    lexicographic order differs from numeric and md5 order ("10" < "9")."""
+    from genome_deduplication_spark.oracle import _clusters_from_edges
+
     # chain 1-2-3-4-5, clique 10-11-12, singleton edge 20-21
     edges = [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12), (10, 12), (20, 21)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {(r["node"], r["component"]) for r in connected_components(df).collect()}
+    nodes = spark.createDataFrame([(n,) for n in (1, 2, 3, 4, 5, 10, 11, 12, 20, 21, 30)],
+                                  "node bigint")
+    got = {(r["node"], r["component"]) for r in connected_components(df, nodes).collect()}
     want = {(n, 1) for n in (1, 2, 3, 4, 5)} | {(n, 10) for n in (10, 11, 12)} | {
-        (20, 20), (21, 20)
+        (20, 20), (21, 20), (30, 30)
     }
     assert got == want
+
+    for seed in (7, 8):
+        universe, edges = _random_cc_graph(seed)
+        numeric = _clusters_from_edges(universe, set(edges))
+        for typ, conv in (("bigint", int), ("string", str)):
+            u = [conv(v) for v in universe]
+            e = [(conv(a), conv(b)) for a, b in edges]
+            if typ == "string":
+                # the string-id unit case as one more disjoint component
+                u += ["a", "b", "c", "x", "y", "lone"]
+                e += [("a", "b"), ("b", "c"), ("x", "y")]
+            rows = connected_components(
+                spark.createDataFrame(e, f"src {typ}, dst {typ}"),
+                spark.createDataFrame([(v,) for v in u], f"node {typ}"),
+            ).collect()
+            want = _clusters_from_edges(u, set(e))
+            assert len(rows) == len(u), (seed, typ)
+            assert {r["node"]: r["component"] for r in rows} == want, (seed, typ)
+        # string order really differs from numeric order on this graph
+        assert any(want[str(v)] != str(numeric[v]) for v in universe), seed
 
 
 def test_components_for_string_ids(spark):
@@ -101,6 +160,33 @@ def test_components_for_string_ids(spark):
         ("a", "a"), ("b", "a"), ("c", "a"),
         ("x", "x"), ("y", "x"),
         ("lone", "lone"),
+    }
+
+
+def test_components_for_string_ids_plan_is_one_join_one_min(spark):
+    """The string-id adapter runs CC on the ids themselves: its executed
+    plan (after the checkpointed rounds) is one universe left join and one
+    min aggregate — no md5 node map, edge join-backs or min-id election."""
+    import re
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("x", "y"), ("10", "9")],
+        "id_a string, id_b string",
+    )
+    ids = spark.createDataFrame(
+        [(u,) for u in ("a", "b", "c", "x", "y", "lone", "10", "9", None)],
+        "url string",
+    )
+    out = components_for_string_ids(edges, ids)
+    plan = _final_plan(out)
+    joins = re.findall(r"\w*(?:Join|CartesianProduct)\b", plan)
+    mins = re.findall(r"Aggregate\(keys?=.*functions=\[min\(", plan)
+    assert len(joins) == 1, plan
+    assert len(mins) == 1, plan
+    got = {(r["url"], r["cluster_key"]) for r in out.collect()}
+    assert got == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
+        ("lone", "lone"), ("10", "10"), ("9", "10"), (None, None),
     }
 
 
@@ -437,7 +523,8 @@ def test_cc_rounds_actually_persist(spark):
     # unpersist any of those between the two reads (observed: the global
     # count DROPPED across a passing CC run). Only NEW ids are evidence.
     before_ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    comp = connected_components(edges)
+    nodes = spark.createDataFrame([(i,) for i in range(402)], "node long")
+    comp = connected_components(edges, nodes)
     n = comp.count()
     after_ids = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
     assert n > 0
