@@ -1,9 +1,10 @@
 """The signature kernel: one Arrow pass from normalized text to shingle
 count, MinHash, SimHash and substring anchors.
 
-Every near-dup path (pipeline, tiers, incremental, streaming) calls
-:func:`make_doc_signature_udf`. Fusing the stages means the text crosses
-the Arrow boundary once and all outputs stay numpy until Arrow
+Every near-dup path (pipeline, tiers, incremental, streaming) builds its
+signature table with :func:`signature_table`, which runs
+:func:`make_doc_signature_udf` once per row. Fusing the stages means the
+text crosses the Arrow boundary once and all outputs stay numpy until Arrow
 serialization — separate shingle / MinHash / SimHash UDFs would
 deserialize the (large) shingle column once per stage and box every
 output value into Python ints. The arithmetic is that of the pure-Python
@@ -13,10 +14,11 @@ functions.simhash.simhash_py), which the kernel tests compare it against.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -206,3 +208,21 @@ def make_doc_signature_udf(cfg: DedupConfig):
             )
 
     return doc_signature_udf
+
+
+def signature_table(
+    df: DataFrame,
+    cfg: DedupConfig,
+    text_col: str = "text",
+    fields: Sequence[str] = ("n_shingles", "minhash", "simhash", "anchors"),
+) -> DataFrame:
+    """``df`` with its (normalized) ``text_col`` replaced by the signature
+    ``fields``: every other column passes through, then one top-level column
+    per field of the kernel's struct. The struct is unpacked at once —
+    checkpointing a raw struct column is pathologically slow in the
+    serializer."""
+    keep = [c for c in df.columns if c != text_col]
+    sig_udf = make_doc_signature_udf(cfg)
+    return df.select(*keep, sig_udf(text_col).alias("_sig")).select(
+        *keep, *[F.col(f"_sig.{f}").alias(f) for f in fields]
+    )

@@ -1,4 +1,4 @@
-"""Exact-duplicate clustering (the minimum end-to-end slice).
+"""First-occurrence election and exact-duplicate clustering.
 
 Semantics transplanted from the reference: a document whose content was seen
 before is a duplicate, and the *first* occurrence wins
@@ -6,14 +6,17 @@ before is a duplicate, and the *first* occurrence wins
 "First" for web pages = min (warc_ts, url) — the election rule replacing the
 reference's sequential file/scan order (code/dedup2.py:549-554).
 
-Physical shape: one hash aggregate on the content hash (map-side partial
-min), no join — the cheapest possible formulation; at 10^12 docs this is a
-single shuffle keyed by a uniformly-distributed 64-bit hash, which AQE can
-coalesce freely (no skew by construction unless true mega-duplicates exist,
-which is exactly the data's skew and is what we want to group).
+Every "keep the first of each group" step of the engine (pipeline stages
+3 and 7, the tier report's identity tiers, the incremental exact star,
+media dedup) calls :func:`first_of_group`: one hash aggregate on the key
+(map-side partial min) and one star join back on it, never a
+collect_list. Both shuffle on the key; the only skew is true
+mega-duplicates, which is exactly what we want to group.
 """
 
 from __future__ import annotations
+
+from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -34,45 +37,48 @@ def content_key(text: Column) -> Column:
     return hash128(normalize_text(text))
 
 
+def first_of_group(df: DataFrame, key: str, order: Sequence[str]) -> DataFrame:
+    """``df``'s rows plus ``first`` (the last ``order`` column of the
+    group's minimum-``order`` row; ties on one order column are broken by
+    the next) and ``group_size``. A NULL key is unknown identity, not a
+    shared one: such a row is its own group (``first`` = its own value,
+    ``group_size`` = 1) and is never dropped. A one-column ``order`` takes
+    a plain ``min`` (numeric ids stay on HashAggregate); only a multi-column
+    order needs ``min(struct)``, over the key and order columns alone.
+    """
+    last = order[-1]
+    if len(order) == 1:
+        pick, picked = F.min(last), F.col("_first")
+    else:
+        pick, picked = F.min(F.struct(*order)), F.col(f"_first.{last}")
+    groups = (
+        df.where(F.col(key).isNotNull())
+        .groupBy(key)
+        .agg(pick.alias("_first"), F.count(F.lit(1)).alias("_size"))
+        .select(key, picked.alias("_first"), "_size")
+    )
+    return df.join(groups, key, "left").select(
+        *df.columns,
+        F.coalesce("_first", last).alias("first"),
+        F.coalesce("_size", F.lit(1)).alias("group_size"),
+    )
+
+
 def exact_dup_clusters(
     pages: DataFrame,
     id_cols: tuple[str, ...] = ("warc_ts", "url"),
     text_col: str = "text",
 ) -> DataFrame:
     """(id..., cluster table): every row gets the content-hash cluster key and
-    the canonical (first-occurrence) member of its cluster.
+    the canonical (first-occurrence) member of its cluster. A row with NULL
+    text has a NULL hash and is a cluster of its own.
 
-    Output: id_cols... , content_hash, canonical_<id_cols[-1]>.
+    Output: content_hash, id_cols..., canonical_id, cluster_size.
     """
     keyed = pages.select(*id_cols, content_key(F.col(text_col)).alias("content_hash"))
-    order_struct = F.struct(*[F.col(c) for c in id_cols])
-    canon = keyed.groupBy("content_hash").agg(
-        F.min(order_struct).alias("_canon"),
-        F.count(F.lit(1)).alias("cluster_size"),
-    )
-    canon = canon.select(
+    return first_of_group(keyed, "content_hash", id_cols).select(
         "content_hash",
-        F.col(f"_canon.{id_cols[-1]}").alias("canonical_id"),
-        "cluster_size",
-    )
-    return keyed.join(canon, "content_hash")
-
-
-def exact_dedup_keep_first(
-    pages: DataFrame,
-    id_cols: tuple[str, ...] = ("warc_ts", "url"),
-    text_col: str = "text",
-) -> DataFrame:
-    """Retain only the canonical row per content hash (the 'samples' of the
-    reference: regions kept for training, code/dedup2.py:17)."""
-    order_struct = F.struct(*[F.col(c) for c in id_cols])
-    ranked = pages.withColumn("content_hash", content_key(F.col(text_col)))
-    winners = ranked.groupBy("content_hash").agg(F.min(order_struct).alias("_w"))
-    cond = F.lit(True)
-    for c in id_cols:
-        cond = cond & (F.col(f"_w.{c}") == F.col(c))
-    return (
-        ranked.join(winners, "content_hash")
-        .where(cond)
-        .drop("_w")
+        *id_cols,
+        F.col("first").alias("canonical_id"),
+        F.col("group_size").alias("cluster_size"),
     )

@@ -23,6 +23,11 @@ A then B == clusters of a one-shot run over A ∪ B. Why it holds:
     components as the full-group star (every star connects all members
     to a group minimum).
 
+Ambiguous docs (normalized text NULL or shorter than one shingle — the
+pipeline's stage-1 split) get a NULL content hash: blank or tiny text is
+not evidence of duplication, so they never join an exact group and stay
+singletons in the components universe.
+
 State layout (``state_dir``): APPEND-ONLY version deltas —
 ``v{i}/signatures`` + ``v{i}/edges`` hold only what batch *i* added (its
 signatures; the near/exact edges it discovered), and the live state is
@@ -52,10 +57,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.signatures import make_doc_signature_udf
+from ..functions.signatures import signature_table
 from ..functions.text import normalize_text
 from .connected_components import components_for_string_ids
-from .exact_dedup import content_key
+from .exact_dedup import content_key, first_of_group
 from .lsh import band_buckets, candidate_pairs
 from .verify import verify_pairs
 
@@ -87,20 +92,18 @@ def _batch_signatures(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     # one-shot pipeline on any corpus with case/whitespace variance, while
     # content_key (which normalizes internally) would still agree — the
     # exact and near tiers would disagree about what the document is.
-    sig_udf = make_doc_signature_udf(cfg)
-    norm = normalize_text(F.col("text"))
-    return (
-        docs.select(
+    # Ambiguous docs get a NULL content hash (when() without otherwise).
+    norm = docs.select("url", normalize_text(F.col("text")).alias("text"))
+    return signature_table(
+        norm.select(
             "url",
-            content_key(norm).alias("content_hash"),
-            sig_udf(norm).alias("sig"),
-        )
-        .select(
-            "url",
-            "content_hash",
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-        )
+            F.when(
+                F.length("text") >= cfg.shingle_k, content_key(F.col("text"))
+            ).alias("content_hash"),
+            "text",
+        ),
+        cfg,
+        fields=("minhash", "simhash"),
     )
 
 
@@ -148,11 +151,10 @@ def dedup_increment(docs: DataFrame, cfg: DedupConfig, state_dir: str) -> dict:
     # exact edges: hash groups containing >= 1 new doc, star around min url
     new_hashes = new_sigs.select("content_hash").distinct()
     grp = all_sigs.join(new_hashes, "content_hash", "leftsemi")
-    mins = grp.groupBy("content_hash").agg(F.min("url").alias("id_a"))
     exact = (
-        grp.join(mins, "content_hash")
-        .where(F.col("url") != F.col("id_a"))
-        .select("id_a", F.col("url").alias("id_b"))
+        first_of_group(grp.select("url", "content_hash"), "content_hash", ("url",))
+        .where(F.col("url") != F.col("first"))
+        .select(F.col("first").alias("id_a"), F.col("url").alias("id_b"))
     )
 
     # this batch's edge DELTA is what gets persisted; CC runs on the

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from genome_deduplication_spark.operators.exact_dedup import first_of_group
 from genome_deduplication_spark.operators.gif import decode_gif
 from genome_deduplication_spark.operators.jpeg import decode_jpeg
 from genome_deduplication_spark.operators.video import (
@@ -556,11 +557,14 @@ def decode_and_featurize(
 
 
 def media_exact_dup_clusters(media: DataFrame) -> DataFrame:
-    """Exact payload dedup: sha2 of bytes, min-id election — JVM-side."""
+    """Exact payload dedup: sha2 of bytes, min-id election — JVM-side. A
+    NULL payload has a NULL hash and is a cluster of its own."""
     keyed = media.select(
         "media_id", F.sha2(F.col("payload"), 256).alias("payload_hash")
     )
-    canon = keyed.groupBy("payload_hash").agg(
-        F.min("media_id").alias("cluster_id"), F.count(F.lit(1)).alias("cluster_size")
+    return first_of_group(keyed, "payload_hash", ("media_id",)).select(
+        "payload_hash",
+        "media_id",
+        F.col("first").alias("cluster_id"),
+        F.col("group_size").alias("cluster_size"),
     )
-    return keyed.join(canon, "payload_hash")

@@ -12,10 +12,11 @@ with first-occurrence-wins deferred commit (code/dedup2.py:13-15,420-421),
 re-expressed as one declarative report instead of sequential file scans.
 
 Scale shape (100 TB):
-  - tiers 1-2 are hash-aggregates on uniform keys (canonical url /
-    normalized-text value) with a co-partitioned join-back — AQE reuses
-    the grouping exchange for the join, and a 10^8-recrawl URL collapses
-    to one group row (star join-back, never a collect_list);
+  - tiers 1-2 are first-occurrence elections (exact_dedup.first_of_group)
+    on uniform keys (canonical url / normalized-text value): a hash
+    aggregate with a co-partitioned join-back — AQE reuses the grouping
+    exchange for the join, and a 10^8-recrawl URL collapses to one group
+    row (star join-back, never a collect_list);
   - tier 3 inherits lsh.py's count-guarded bucket caps and the O(log n)
     star CC — no all-pairs stage anywhere;
   - the output is one fixed-width row per input doc; normalized text is
@@ -28,10 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DedupConfig
-from ..functions.signatures import make_doc_signature_udf
+from ..functions.signatures import signature_table
 from ..functions.text import normalize_text
 from ..functions.urls import canonicalize_url
 from .connected_components import connected_components
+from .exact_dedup import first_of_group
 from .lsh import candidate_pairs
 from .verify import verify_pairs
 
@@ -56,9 +58,9 @@ def tier_dedup_report(
       url    same canonical URL as a lower-id doc (content irrelevant —
              a recrawl of the same resource). NULL/empty urls never fold
              at this tier: unknown resource identity is not evidence of
-             duplication (and a null-rejecting equi-join must not drop
-             the row — every doc still gets exactly one output row);
-             such docs fall through to the content tiers
+             duplication, so their key is NULL and the election keeps
+             each such doc as its own group; they fall through to the
+             content tiers
       exact  same normalized text as a lower-id url-survivor (empty/NULL
              text never folds: unknown content is not evidence of
              duplication)
@@ -67,81 +69,56 @@ def tier_dedup_report(
              and pass through, mirroring the pipeline's ambiguous split)
       kept   survived every tier
     """
-    # NULL/empty url -> a per-doc sentinel key ('\x00null:<id>'): it keeps
-    # the row alive through the tier-1 equi-join (NULL keys are rejected by
-    # equi-joins, which silently deleted such docs from the report) while
-    # guaranteeing it folds with nothing (real canonical urls never start
-    # with \x00, and the id makes each sentinel unique). Two projections on
-    # purpose, and nullif (2 refs) rather than when/otherwise (3 refs):
-    # CollapseProject inlines cheap/single-use aliases, and the tier-1
-    # join's inferred isnotnull() pushes below the projection inlining the
-    # whole tree again — keeping the reference count minimal is what keeps
-    # the generated code inside janino's method limit (observed
-    # codegen-compile fallback when it isn't).
+    # empty url / empty text -> NULL key: the election keeps a NULL-key doc
+    # as its own group, so unknown identity folds with nothing and still
+    # gets its output row
     base = docs.select(
         F.col(id_col).alias("doc_id"),
-        canonicalize_url(F.col(url_col)).alias("cu_raw"),
+        F.nullif(canonicalize_url(F.col(url_col)), F.lit("")).alias("cu"),
         normalize_text(F.col(text_col)).alias("s"),
-    ).select(
-        "doc_id",
-        F.coalesce(
-            F.nullif(F.col("cu_raw"), F.lit("")),
-            F.concat(F.lit("\x00null:"), F.col("doc_id").cast("string")),
-        ).alias("cu"),
-        "s",
     )
 
     # -- tier 1: canonical-url identity fold --------------------------------
-    u_rep = base.groupBy("cu").agg(F.min("doc_id").alias("rep"))
-    t1 = base.join(u_rep, "cu").select("doc_id", "s", "rep")
-    url_removed = t1.where(F.col("doc_id") != F.col("rep")).select(
-        "doc_id", F.lit("url").alias("tier"), F.col("rep").alias("kept_by")
+    t1 = first_of_group(base, "cu", ("doc_id",))
+    url_removed = t1.where(F.col("doc_id") != F.col("first")).select(
+        "doc_id", F.lit("url").alias("tier"), F.col("first").alias("kept_by")
     )
-    surv1 = t1.where(F.col("doc_id") == F.col("rep")).select("doc_id", "s")
+    surv1 = t1.where(F.col("doc_id") == F.col("first")).select(
+        "doc_id", "s", F.nullif(F.col("s"), F.lit("")).alias("sk")
+    )
 
     # -- tier 2: exact normalized-content fold among url-survivors ----------
-    valid = surv1.where(F.col("s").isNotNull() & (F.col("s") != ""))
-    e_rep = valid.groupBy("s").agg(F.min("doc_id").alias("rep"))
-    t2 = valid.join(e_rep, "s").select("doc_id", "s", "rep")
-    exact_removed = t2.where(F.col("doc_id") != F.col("rep")).select(
-        "doc_id", F.lit("exact").alias("tier"), F.col("rep").alias("kept_by")
-    )
-    surv2 = t2.where(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "s"
-    ).unionByName(
-        surv1.where(F.col("s").isNull() | (F.col("s") == "")).select("doc_id", "s")
+    t2 = first_of_group(surv1, "sk", ("doc_id",))
+    exact_removed = t2.where(F.col("doc_id") != F.col("first")).select(
+        "doc_id", F.lit("exact").alias("tier"), F.col("first").alias("kept_by")
     )
     # multi-consumer cut: surv2 feeds the signature path AND the
     # ineligible-kept branch; without materialization each consumer
-    # re-runs normalize + both identity-tier aggregates. Eager, not lazy —
+    # re-runs normalize + both identity-tier elections. Eager, not lazy —
     # lazy localCheckpoint marks are silently not persisted under AQE
     # (the round-4 recompute bug, plans/pipeline.py stage()).
-    surv2 = surv2.localCheckpoint(eager=True)
+    surv2 = (
+        t2.where(F.col("doc_id") == F.col("first"))
+        .select("doc_id", "s")
+        .localCheckpoint(eager=True)
+    )
 
     # -- tier 3: near-dup among exact-survivors ------------------------------
     # same machinery as the flagship pipeline (signatures -> capped LSH
     # buckets -> verify -> CC); survivors have pairwise-distinct text, so
     # no exact short-circuit stage is needed here
     eligible = F.length("s") >= F.lit(cfg.shingle_k)  # NULL-safe: NULL -> filtered
-    sig_udf = make_doc_signature_udf(cfg)
     # int64 ids end to end: a bigint id IS the fixed-width shuffle key, so
     # candidate_pairs skips its hash128 compact-key mapping, and the CC
-    # label (min doc_id of the component) IS the near-tier representative
-    sigs = (
-        surv2.where(eligible)
-        .select(
-            F.col("doc_id").alias("url"),
-            sig_udf(F.col("s")).alias("sig"),
-        )
-        .select(
-            "url",
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-        )
-        # the Arrow signature kernel has ~5 downstream consumers (bucket
-        # counts, pairs, verify a/b, CC universe) — run it exactly once
-        .localCheckpoint(eager=True)
-    )
+    # label (min doc_id of the component) IS the near-tier representative.
+    # The Arrow signature kernel has ~5 downstream consumers (bucket
+    # counts, pairs, verify a/b, CC universe) — run it exactly once
+    sigs = signature_table(
+        surv2.where(eligible).select(F.col("doc_id").alias("url"), "s"),
+        cfg,
+        text_col="s",
+        fields=("minhash", "simhash"),
+    ).localCheckpoint(eager=True)
     pairs = candidate_pairs(sigs, cfg)
     t3 = connected_components(
         verify_pairs(pairs, sigs, cfg).where("is_dup").select(

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
-from genome_deduplication_spark.functions.signatures import make_doc_signature_udf
+from genome_deduplication_spark.functions.signatures import signature_table
 from genome_deduplication_spark.functions.text import (
     extract_text_from_html,
     normalize_text,
@@ -39,7 +39,10 @@ from genome_deduplication_spark.functions.text import (
 from genome_deduplication_spark.operators.connected_components import (
     components_for_string_ids,
 )
-from genome_deduplication_spark.operators.exact_dedup import content_key
+from genome_deduplication_spark.operators.exact_dedup import (
+    content_key,
+    first_of_group,
+)
 from genome_deduplication_spark.operators.lsh import candidate_pairs
 from genome_deduplication_spark.operators.suffix_array import (
     exact_substring_pairs,
@@ -155,25 +158,16 @@ def dedup_pipeline(
 
     # -- 2 signatures ----------------------------------------------------------
     # one Arrow pass per document computes shingles (O(n) rolling hash),
-    # MinHash, SimHash AND the exact-substring anchor index; struct fields
-    # are extracted immediately (checkpointing a raw struct column is
-    # pathologically slow in the serializer)
-    doc_signature_udf = make_doc_signature_udf(cfg)
-
+    # MinHash, SimHash AND the exact-substring anchor index
     def _signatures():
-        return docs.select(
-            "url",
-            "warc_ts",
-            content_key(F.col("text")).alias("content_hash"),
-            doc_signature_udf("text").alias("sig"),
-        ).select(
-            "url",
-            "warc_ts",
-            "content_hash",
-            F.col("sig.n_shingles").alias("n_shingles"),
-            F.col("sig.minhash").alias("minhash"),
-            F.col("sig.simhash").alias("simhash"),
-            F.col("sig.anchors").alias("anchors"),
+        return signature_table(
+            docs.select(
+                "url",
+                "warc_ts",
+                content_key(F.col("text")).alias("content_hash"),
+                "text",
+            ),
+            cfg,
         )
 
     signatures = stage("signatures", _signatures)
@@ -187,20 +181,20 @@ def dedup_pipeline(
     # exact-duplicate short-circuit: identical content hash is a sure edge —
     # no LSH needed; also collapse exact groups to one LSH representative so
     # a 10^6-copy mega-duplicate costs one signature in every band bucket.
+    # One election serves both: members hang off their group's first
+    # occurrence as star edges, and the first occurrences are the
+    # representatives. Its aggregate sees only the key/order columns: the
+    # struct min plans a SortAggregate, and sorting rows that carry the 1KB
+    # minhash array was the top CPU burner of the 640k profile (PLANS.md r5).
+    elected = first_of_group(
+        signatures.select("url", "warc_ts", "content_hash", "minhash"),
+        "content_hash",
+        ("warc_ts", "url"),
+    )
+
     def _exact_edges():
-        # star edges canonical->member via a join-back, NOT collect_list:
-        # a 10^8-copy boilerplate page must not materialize its whole member
-        # list in one reducer row (multi-GB single row -> OOM). The hash
-        # aggregation and the join both shuffle on content_hash, so AQE
-        # reuses the partitioning; skewed hashes split via AQE skew handling.
-        canon = signatures.groupBy("content_hash").agg(
-            F.min(F.struct("warc_ts", "url")).alias("_c")
-        ).select("content_hash", F.col("_c.url").alias("id_a"))
-        return (
-            signatures.select("content_hash", F.col("url").alias("id_b"))
-            .join(canon, "content_hash")
-            .where(F.col("id_a") != F.col("id_b"))
-            .select("id_a", "id_b")
+        return elected.where(F.col("url") != F.col("first")).select(
+            F.col("first").alias("id_a"), F.col("url").alias("id_b")
         )
 
     # exact_edges is multi-consumer only when the substring pass (known-
@@ -209,24 +203,6 @@ def dedup_pipeline(
     # with no reuse to pay for it (r6 event-log profile).
     exact_edges_reused = enable_substring_pass or ctx is not None
     exact_edges = None  # materialized below, overlapped when possible
-
-    def _reps():
-        # exact-group representatives: one signature per content hash, so a
-        # 10^6-copy mega-duplicate costs one signature in every band bucket.
-        # The election aggregates NARROW rows only: any string/struct/array
-        # aggregate plans a SortAggregate (no mutable buffer), and sorting
-        # rows that carry the 1KB minhash array was the single biggest CPU
-        # burner of the 640k profile (PLANS.md round 5). Elect ids first,
-        # then fetch minhash by semi-join — the rep-id side broadcasts at
-        # bench scale and co-partitions at cluster scale.
-        rep_ids = (
-            signatures.groupBy("content_hash")
-            .agg(F.min(F.struct("warc_ts", "url")).alias("_c"))
-            .select(F.col("_c.url").alias("url"))
-        )
-        return signatures.join(rep_ids, "url", "leftsemi").select(
-            "url", "minhash"
-        )
 
     # truncation accounting (lsh.py's docstring promise: buckets the
     # candidate stage dropped/capped are accounted, never silent — reference
@@ -244,7 +220,11 @@ def dedup_pipeline(
         # AQE, PLANS.md round 4). Before this, the reps election and the
         # band explode each ran twice (640k profile: two ~360-CPU-s
         # SortAggregate stages over the full signature table).
-        reps = _reps().localCheckpoint(eager=True)
+        reps = (
+            elected.where(F.col("url") == F.col("first"))
+            .select("url", "minhash")
+            .localCheckpoint(eager=True)
+        )
         if ctx is None:
             return candidate_pairs(reps, cfg, id_col="url", sig_col="minhash")
         pairs, stats = candidate_pairs(
@@ -378,15 +358,16 @@ def dedup_pipeline(
 
     # -- 7 clusters: canonical = min(warc_ts, url) within each component ---------
     def _clusters():
-        labeled = components.join(docs.select("url", "warc_ts"), "url")
-        canon = labeled.groupBy("cluster_key").agg(
-            F.min(F.struct("warc_ts", "url")).alias("_c"),
-            F.count(F.lit(1)).alias("cluster_size"),
+        # a no-op filter (the join drops NULL urls, the only NULL keys) that
+        # matches the one the election infers for its aggregate side, so
+        # both sides share one components x docs broadcast (one job less)
+        labeled = components.join(docs.select("url", "warc_ts"), "url").where(
+            F.col("cluster_key").isNotNull()
         )
-        return labeled.join(canon, "cluster_key").select(
+        return first_of_group(labeled, "cluster_key", ("warc_ts", "url")).select(
             "url",
-            F.col("_c.url").alias("cluster_id"),
-            "cluster_size",
+            F.col("first").alias("cluster_id"),
+            F.col("group_size").alias("cluster_size"),
         )
 
     clusters = stage("clusters", _clusters)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from genome_deduplication_spark.config import DedupConfig
-from genome_deduplication_spark.functions.signatures import make_doc_signature_udf
+from genome_deduplication_spark.functions.signatures import signature_table
 from genome_deduplication_spark.functions.text import normalize_text
 from genome_deduplication_spark.operators.exact_dedup import content_key
 
@@ -30,26 +30,19 @@ from genome_deduplication_spark.operators.exact_dedup import content_key
 def streaming_signatures(pages_stream: DataFrame, cfg: DedupConfig) -> DataFrame:
     """pages stream -> signature stream (same one-pass kernel as batch
     stage 2, so streamed and batch signature tables are interchangeable)."""
-    doc_signature_udf = make_doc_signature_udf(cfg)
     norm = pages_stream.select(
         "url",
         "warc_ts",
         normalize_text(F.col("text")).alias("text"),
-        "lang",
     ).where(F.col("text").isNotNull() & (F.length("text") >= cfg.shingle_k))
-    return norm.select(
-        "url",
-        "warc_ts",
-        content_key(F.col("text")).alias("content_hash"),
-        doc_signature_udf("text").alias("sig"),
-    ).select(
-        "url",
-        "warc_ts",
-        "content_hash",
-        F.col("sig.n_shingles").alias("n_shingles"),
-        F.col("sig.minhash").alias("minhash"),
-        F.col("sig.simhash").alias("simhash"),
-        F.col("sig.anchors").alias("anchors"),
+    return signature_table(
+        norm.select(
+            "url",
+            "warc_ts",
+            content_key(F.col("text")).alias("content_hash"),
+            "text",
+        ),
+        cfg,
     )
 
 

@@ -104,3 +104,26 @@ def test_state_versions_are_deltas(spark, corpus, tmp_path):
     urls_b = {r["url"] for r in b.select("url").collect()}
     assert {r["url"] for r in v1.select("url").collect()} == urls_b
     assert r2["n_docs"] == corpus.count()   # manifest-accumulated count
+
+
+def test_ambiguous_docs_stay_singletons(spark, tmp_path):
+    """Blank and sub-shingle docs are ambiguous (the pipeline's stage-1
+    split): their content is no evidence of duplication, so they must not
+    fold into exact clusters — while a real exact pair (byte-different,
+    equal after normalization) still does."""
+    long_text = " ".join(f"word{i} token{i}" for i in range(60))
+    rows = [
+        ("u://blank", ""),
+        ("u://spaces", "   "),
+        ("u://tiny1", "404"),
+        ("u://tiny2", "404"),
+        ("u://real1", long_text),
+        ("u://real2", "  " + long_text.upper()),
+    ]
+    docs = spark.createDataFrame(rows, "url string, text string")
+    r = dedup_increment(docs, DedupConfig(), str(tmp_path / "amb_state"))
+    parts = _partitions(r["clusters"])
+    assert frozenset({"u://real1", "u://real2"}) in parts
+    for url in ("u://blank", "u://spaces", "u://tiny1", "u://tiny2"):
+        assert frozenset({url}) in parts, parts
+    assert r["n_edges"] == 1

@@ -12,6 +12,7 @@ from genome_deduplication_spark.operators.connected_components import (
     components_for_string_ids,
     connected_components,
 )
+from genome_deduplication_spark.operators.exact_dedup import first_of_group
 from genome_deduplication_spark.operators.split import (
     sample_exact_n,
     train_dev_split,
@@ -188,6 +189,56 @@ def test_components_for_string_ids_plan_is_one_join_one_min(spark):
         ("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"),
         ("lone", "lone"), ("10", "10"), ("9", "10"), (None, None),
     }
+
+
+def test_first_of_group_keeps_null_key_rows(spark):
+    """A NULL key is unknown identity: each NULL-key row is its own group
+    (first = its own id, group_size 1), and no input row is dropped."""
+    df = spark.createDataFrame(
+        [(1, "k"), (2, "k"), (3, None), (4, None), (5, "z")],
+        "id bigint, key string",
+    )
+    got = {
+        r["id"]: (r["key"], r["first"], r["group_size"])
+        for r in first_of_group(df, "key", ("id",)).collect()
+    }
+    assert got == {
+        1: ("k", 1, 2),
+        2: ("k", 1, 2),
+        3: (None, 3, 1),
+        4: (None, 4, 1),
+        5: ("z", 5, 1),
+    }
+
+
+def test_first_of_group_breaks_ties_on_next_order_column(spark):
+    """Group "g" ties on ts=1 between urls "b" and "a": the next order
+    column decides, so "a" wins; "0" has the smallest url of the group but
+    a later ts, so it loses."""
+    df = spark.createDataFrame(
+        [(1, "b", "g"), (1, "a", "g"), (0, "z", "h"), (2, "0", "g"), (5, "y", "h")],
+        "ts bigint, url string, key string",
+    )
+    out = first_of_group(df, "key", ("ts", "url"))
+    assert out.columns == ["ts", "url", "key", "first", "group_size"]
+    got = {(r["url"], r["first"], r["group_size"]) for r in out.collect()}
+    assert got == {
+        ("b", "a", 3), ("a", "a", 3), ("0", "a", 3),
+        ("z", "z", 2), ("y", "z", 2),
+    }
+
+
+def test_first_of_group_single_bigint_order_is_hash_aggregate(spark):
+    """A one-column numeric order aggregates a plain min, which stays on
+    HashAggregate; min(struct) would fall to SortAggregate or
+    ObjectHashAggregate."""
+    df = spark.range(200).select(
+        F.col("id"), (F.col("id") % 7).cast("string").alias("key")
+    )
+    plan = _final_plan(first_of_group(df, "key", ("id",)))
+    assert "HashAggregate" in plan, plan
+    assert "SortAggregate" not in plan, plan
+    assert "ObjectHashAggregate" not in plan, plan
 
 
 def _lsh_key_order(ids):
